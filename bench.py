@@ -24,9 +24,13 @@ local[32] executor threads (loadavg is system-wide and decays on a
 ~1-minute constant); only load1_preflight is ambient.
 
 Queries run in the PINNED order below, NOT registry order: a query's
-position in a fresh JVM moves its time by up to 2x (whole-stage codegen
-and shuffle infrastructure reach C2-compiled steady state only after
-the first handful of queries). Round 3's apparent regressions were the
+position in a fresh JVM moves its time. Timing the basket in reversed
+order moved per-query mins by 0.86-1.13x with Spark's default 100-entry
+codegen cache and 0.72-1.32x with the sized one (sf0.1, 4 vCPUs, one
+run per order; PERF.md "Codegen cache"): queries timed later run
+faster, as the JIT keeps warming through the run. It is not
+codegen eviction: a query's timed reps compile almost nothing (the
+``codegen`` field). Round 3's apparent regressions were the
 three queries the verify-prefix reorder moved to positions 1-3; round
 4's (events_sessionization_30min +18%, ingest_warehouse_build +20%)
 were the two queries a REGISTRATION-order drift moved from positions
@@ -49,6 +53,7 @@ sys.path.insert(0, REPO)
 def main() -> None:
     from financial_data_warehouse_automation_spark.registry import REGISTRY, load_all
     from financial_data_warehouse_automation_spark.session import (
+        codegen_stats,
         cpu_count,
         get_spark,
         sf_dir,
@@ -98,8 +103,10 @@ def main() -> None:
         f"only-flagged={headline - set(basket)} only-pinned={set(basket) - headline}"
     )
     specs = {n: REGISTRY[n] for n in basket}
+    cg0 = codegen_stats(spark)
     for spec in specs.values():  # untimed sweep: C2-warm JVM for all
         spec.builder(spark, d).collect()
+    cg_sweep = codegen_stats(spark)
 
     # box-speed calibration (round 10): two same-evening previews an
     # hour apart read 10.18s and 11.93s with the CALMER loadavg on the
@@ -156,14 +163,20 @@ def main() -> None:
         li_price.agg({"l_extendedprice": "sum"}).collect()
         calib_scan = min(calib_scan, time.perf_counter() - t0)
     timings: dict[str, float] = {}
+    timed_classes: dict[str, int] = {}
+    timed_ms = 0.0
     for name, spec in specs.items():
         spec.builder(spark, d).collect()  # per-query warm-up
+        n0, ms0 = codegen_stats(spark)
         best = float("inf")
         for _ in range(reps):
             t0 = time.perf_counter()
             spec.builder(spark, d).collect()
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 4)
+        n1, ms1 = codegen_stats(spark)
+        timed_classes[name] = n1 - n0
+        timed_ms += ms1 - ms0
 
     total = round(sum(timings.values()), 4)
     print(json.dumps({
@@ -188,6 +201,21 @@ def main() -> None:
         "load_gate": gate,
         "load_wait_sec": waited,
         "load1_end_self_inclusive": round(os.getloadavg()[0], 2),
+        # generated-code compiles (additive): classes compiled and
+        # compile ms in the cold untimed sweep and summed over all timed
+        # reps, plus the queries that compiled during their timed reps.
+        # A warm rep should compile almost nothing; a timed_classes near
+        # reps x sweep_classes means the codegen cache is evicting.
+        "codegen": {
+            "sweep_classes": cg_sweep[0] - cg0[0],
+            "sweep_ms": round(cg_sweep[1] - cg0[1], 1),
+            "timed_reps": reps,
+            "timed_classes": sum(timed_classes.values()),
+            "timed_ms": round(timed_ms, 1),
+            "timed_classes_by_query": {
+                n: c for n, c in timed_classes.items() if c
+            },
+        },
         "calib_spark_sec": round(calib, 4),
         "calib_ref_spark_sec": CALIB_REF,
         "calib_scan_sec": round(calib_scan, 4),

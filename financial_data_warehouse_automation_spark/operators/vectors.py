@@ -34,16 +34,33 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
+# Spark SQL's reserved keywords: the rows of ``sql_keywords()`` flagged
+# reserved under ``spark.sql.ansi.enforceReservedKeywords`` (Spark 4.1).
+# Such a name parses as the keyword, not as a column, inside a template.
+SQL_RESERVED = frozenset("""
+ALL AND ANY AS AUTHORIZATION BOTH CALL CASE CAST CHECK COLLATE COLLATION
+COLUMN CONSTRAINT CREATE CROSS CURRENT_DATE CURRENT_TIME CURRENT_TIMESTAMP
+CURRENT_USER DISTINCT ELSE END ESCAPE EXCEPT EXECUTE FALSE FETCH FILTER FOR
+FOREIGN FROM FULL GRANT GROUP HAVING IN INNER INTERSECT INTO IS JOIN LATERAL
+LEADING LEFT NATURAL NOT NULL OFFSET ON ONLY OR ORDER OUTER OVERLAPS PRIMARY
+RECURSIVE REFERENCES RIGHT SELECT SESSION_USER SOME SQL TABLE THEN TIME TO
+TRAILING UNION UNIQUE UNKNOWN USER USING WHEN WHERE WITH WITHIN
+""".split())
+
+
 def _ident(name: str) -> str:
-    """Precondition gate for the parsed-SQL helpers (r16, advisor): the
-    templates interpolate raw column names, so a name needing backticks
-    (space, dash, dot) would break parsing or bind to the wrong
-    expression. All engine callers pass plain identifiers; fail loudly
-    rather than emit a mis-binding template."""
-    assert name.isidentifier(), (
-        f"dot_sql/norm_sql require a plain-identifier column name, "
-        f"got {name!r} — quote/rename the column before calling"
-    )
+    """Precondition gate for the parsed-SQL helpers: the templates
+    interpolate raw column names, so a name needing backticks (space,
+    dash, dot) or a reserved word (``select``, ``cast``, ``and``) would
+    break parsing or bind to the wrong expression. All engine callers
+    pass plain identifiers; fail loudly rather than emit a mis-binding
+    template."""
+    if not name.isidentifier() or name.upper() in SQL_RESERVED:
+        raise ValueError(
+            f"dot_sql/norm_sql require a plain, non-reserved identifier "
+            f"as column name, got {name!r} — rename the column before "
+            f"calling"
+        )
     return name
 
 
@@ -54,7 +71,7 @@ def dot_sql(a: str, b: str) -> str:
     0.5s of ann_cosine_topk_brute's build was dot/l2_norm plumbing);
     operators that know their column names compose strings instead —
     same plan, same values (the rhp_bucket pattern, round 5). Names
-    must be plain identifiers (asserted)."""
+    must be plain, non-reserved identifiers (checked)."""
     a, b = _ident(a), _ident(b)
     return (
         f"aggregate(zip_with({a}, {b}, "

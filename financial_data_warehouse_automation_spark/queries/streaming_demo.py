@@ -1127,15 +1127,16 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # replay: a FRESH start from the same checkpoint sits at head and
     # MUST be a no-op (this probe is the one that needs a restart).
-    # r16: proven at the BYTE level — the sink directory's exact data
-    # file listing (name, size) is unchanged — which is a strictly
-    # stronger claim than the old row-count equality and costs zero
-    # Spark jobs instead of two full sink scans (guide §5).
+    # Proven at the LISTING level — the sink directory's data file
+    # listing (name, size, mtime_ns) is unchanged, so no file was
+    # added, removed or rewritten in place — which is a stronger claim
+    # than the old row-count equality and costs zero Spark jobs instead
+    # of two full sink scans (guide §5).
     def sink_listing():
         return sorted(
-            (n, os.path.getsize(os.path.join(out, n)))
-            for n in os.listdir(out)
-            if not n.startswith(("_", "."))
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+            for e in os.scandir(out)
+            if not e.name.startswith(("_", "."))
         )
 
     listing_before = sink_listing()

@@ -15,13 +15,50 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
+# Spark's generated-code cache (whole-stage and expression classes) is an
+# LRU of spark.sql.codegen.cache.maxEntries, 100 by default, and a Guava
+# cache split into 4 segments, so it evicts before it is full. The whole
+# registry (262 queries, sf0.01) compiles 3,618 distinct classes and the
+# 14-query basket about 310, so at 100 entries a warm pass recompiled
+# almost everything: 5,032 classes per registry pass, 250-318 per basket
+# pass. 8192 is that 3.6k-class working set with 2x headroom for the
+# segmenting. Evicted classes are not unloaded promptly, so a large cache
+# costs no extra metaspace (248 MB unbounded vs 254 MB at the default,
+# over two registry passes).
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` if set, else min(16g, half of physical
+    memory): a 16g heap on a 15 GB machine gets the JVM OOM-killed."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) so far in this JVM.
+
+    Both counters are JVM-global, so in local mode they cover the
+    driver's and the executor threads' compiles: the class count is
+    ``CodegenMetrics``' compile-time histogram count, the time is
+    ``CodeGenerator.compileTime`` (nanoseconds, an exact sum).
+    """
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return int(n), ns / 1e6
 
 
 def get_spark(app_name: str = "financial_data_warehouse_automation_spark",
@@ -43,8 +80,18 @@ def get_spark(app_name: str = "financial_data_warehouse_automation_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem())
         .config("spark.ui.enabled", "false")
+        # static conf: only the builder of the first session can set it
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # With AQE the whole-stage codegen ids follow the order in which
+        # query stages are created, which varies from run to run, and the
+        # id is part of the generated class name, so a renumbered plan
+        # recompiles classes the cache already holds (ingest_warehouse_build:
+        # 18 classes in the basket's second pass). Without the id the
+        # same stage code is one cache entry in every query and every
+        # pass; the cold basket pass compiles 265 classes instead of 295.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # Spark 4's PySpark call-site capture (DataFrame debugging) adds

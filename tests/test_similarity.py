@@ -125,3 +125,36 @@ def test_semantic_dedup_candidates_subset_of_exact(spark, sf_dir):
     assert len(approx_dropped) == total_dropped
     if exact_dropped:
         assert len(approx_dropped) / len(exact_dropped) >= 0.2
+
+
+@pytest.mark.parametrize(
+    "name", ["select", "CAST", "and", "qvec b", "q-vec", "emb.x"]
+)
+def test_sql_templates_reject_reserved_and_non_identifiers(name):
+    from financial_data_warehouse_automation_spark.operators.vectors import (
+        dot_sql,
+        norm_sql,
+    )
+
+    with pytest.raises(ValueError, match="non-reserved identifier"):
+        dot_sql("embedding", name)
+    with pytest.raises(ValueError, match="non-reserved identifier"):
+        norm_sql(name)
+    assert "embedding" in norm_sql("embedding")
+
+
+def test_reserved_word_list_matches_spark(spark):
+    """The gate's keyword list is Spark's own: the reserved rows of
+    ``sql_keywords()`` with reserved keywords enforced."""
+    from financial_data_warehouse_automation_spark.operators.vectors import (
+        SQL_RESERVED,
+    )
+
+    conf = "spark.sql.ansi.enforceReservedKeywords"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        rows = spark.sql("SELECT keyword, reserved FROM sql_keywords()").collect()
+    finally:
+        spark.conf.set(conf, before)
+    assert {r.keyword for r in rows if r.reserved} == SQL_RESERVED

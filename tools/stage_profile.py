@@ -51,8 +51,10 @@ def main() -> None:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", sess.driver_mem())
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(sess.CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config(
