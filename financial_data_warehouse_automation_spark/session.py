@@ -18,13 +18,14 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 # Spark's generated-code cache (whole-stage and expression classes) is an
 # LRU of spark.sql.codegen.cache.maxEntries, 100 by default, and a Guava
 # cache split into 4 segments, so it evicts before it is full. The whole
-# registry (262 queries, sf0.01) compiles 3,618 distinct classes and the
-# 14-query basket about 310, so at 100 entries a warm pass recompiled
-# almost everything: 5,032 classes per registry pass, 250-318 per basket
-# pass. 8192 is that 3.6k-class working set with 2x headroom for the
-# segmenting. Evicted classes are not unloaded promptly, so a large cache
-# costs no extra metaspace (248 MB unbounded vs 254 MB at the default,
-# over two registry passes).
+# registry (262 queries, sf0.01) compiles 3,618 distinct classes with
+# stage ids in class names (3,175 without, see below) and the 14-query
+# basket about 300, so at 100 entries a warm pass recompiled almost
+# everything: 4,359-5,032 classes per registry pass, 250-318 per basket
+# pass; at 8192, 6-80 and 0-18. 8192 is the 3.6k-class working set with
+# 2x headroom for the segmenting. Evicted classes are not unloaded
+# promptly, so a large cache costs no extra metaspace (248 MB unbounded
+# vs 254 MB at the default, over two registry passes).
 CODEGEN_CACHE_ENTRIES = 8192
 
 
