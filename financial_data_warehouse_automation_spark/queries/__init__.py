@@ -27,6 +27,7 @@ from financial_data_warehouse_automation_spark.queries import (  # noqa: F401
     ingest_demo,
     multimodal,
     relational,
+    storage,
     similarity,
     streaming_demo,
     text,
