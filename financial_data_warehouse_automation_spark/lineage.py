@@ -26,11 +26,8 @@ convergence loops with a FIXED short unroll under this flag, so any
 VALUE computed in audit mode may be non-converged garbage (duplicate
 component ids, partial labels). Audit mode exists for exactly one kind
 of consumer: code that reads ``executedPlan()`` / ``explain`` output
-and never a row. The canonical flag name is therefore
-``SPARK_GRAFT_PLAN_AUDIT=1``; the historical name
-``SPARK_GRAFT_NO_CHECKPOINT=1`` is honored as a deprecated alias (it
-described only the checkpoint side effect and invited value
-consumption — r9 advisor finding).
+and never a row, which is what the flag's name,
+``SPARK_GRAFT_PLAN_AUDIT=1``, says.
 
 At 100 TB the same cut is GraphX's between-supersteps materialization:
 ``localCheckpoint`` stores the relation on executors (memory+disk) and
@@ -51,12 +48,8 @@ def plan_audit_mode() -> bool:
     """True when the session runs in plan-audit mode: ``cut()`` is an
     identity AND iterative graph loops unroll a fixed round count, so
     results are PLANS-ONLY — never consume values computed under this
-    flag. Reads ``SPARK_GRAFT_PLAN_AUDIT`` (canonical) and
-    ``SPARK_GRAFT_NO_CHECKPOINT`` (deprecated alias) per call."""
-    return (
-        os.environ.get("SPARK_GRAFT_PLAN_AUDIT") == "1"
-        or os.environ.get("SPARK_GRAFT_NO_CHECKPOINT") == "1"
-    )
+    flag. Reads ``SPARK_GRAFT_PLAN_AUDIT`` per call."""
+    return os.environ.get("SPARK_GRAFT_PLAN_AUDIT") == "1"
 
 
 def cut(df: DataFrame, *, eager: bool) -> DataFrame:

@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 
 from financial_data_warehouse_automation_spark.lineage import cut
 
-# Rounds unrolled when SPARK_GRAFT_PLAN_AUDIT=1 (plan-audit mode; the
-# deprecated alias SPARK_GRAFT_NO_CHECKPOINT is honored — see
+# Rounds unrolled when SPARK_GRAFT_PLAN_AUDIT=1 (plan-audit mode, see
 # lineage.plan_audit_mode). VALUES COMPUTED UNDER AUDIT MODE ARE
 # INVALID: the fixed unroll skips convergence checks AND the loud
 # non-convergence raise, so component labels may be partial with

@@ -1,6 +1,7 @@
-"""Versioned-manifest snapshot store: the commit/expiry half of the
-lakehouse MVCC primitive (queries/relational.py's
-orders_snapshot_cow_read demonstrates the read/COW half inline).
+"""Versioned-manifest snapshot store: commit, expiry and the one read
+path of the lakehouse MVCC primitive (queries/storage.py demonstrates
+each protocol end to end, starting with orders_snapshot_cow_read's
+copy-on-write commit and time-travel read).
 
 A *table* here is a directory holding immutable data directories plus
 ``manifest-v<N>.json`` files, each mapping a bucket id to the data
@@ -87,9 +88,12 @@ metadata growth the same way it bounds data.
 The ONE reader (r14): :func:`read_snapshot` composes, in order,
 scan-planner pruning (spec → stats → Bloom) → per-generation
 column-mapped read (``schema`` sidecar, when present) → deletion-vector
-anti-filter. ``read_snapshot_evolved`` survives as a thin compatibility
-wrapper. A table that has BOTH evolved its schema and taken a
-merge-on-read delete now has a single correct-and-pruned read path.
+anti-filter, over the whole version or a subset of its buckets. A table
+that has BOTH evolved its schema and taken a merge-on-read delete has a
+single correct-and-pruned read path, and every committed-snapshot read
+in ``queries/`` and ``streaming/`` goes through it; only reads of
+staged, not-yet-committed directories stay raw (marked
+``# pre-commit read``).
 """
 
 from __future__ import annotations
@@ -1112,6 +1116,7 @@ def read_snapshot(
     predicates: list[Pred] | None = None,
     version: int | None = None,
     branch: str = "main",
+    buckets=None,
 ):
     """THE read path (r14 — the r13 verdict's #1: ONE reader for the
     whole store). Composes, in order:
@@ -1159,7 +1164,12 @@ def read_snapshot(
     instead of ``StopIteration`` (r13 advisor): the store's buckets
     carry the schema, so an empty table has no schema to read — keep a
     ``schema`` sidecar or an empty bucket if you need a typed empty
-    read."""
+    read.
+
+    ``buckets`` restricts the read to those bucket ids (default: every
+    bucket) — a change feed's pre/post images or a fold's touched
+    buckets — with pruning, column mapping and deletion vectors applied
+    exactly as for a whole-version read."""
     from pyspark.sql import functions as F
 
     if version is None:
@@ -1173,6 +1183,9 @@ def read_snapshot(
             "publish an empty bucket (or keep one) for typed empty reads"
         )
     _, units, _ = _plan_units(table_dir, preds, version, branch)
+    if buckets is not None:
+        wanted = {str(b) for b in buckets}
+        units = {b: paths for b, paths in units.items() if b in wanted}
     survivors = {b: paths for b, paths in units.items() if paths}
     side = read_sidecar(table_dir, version, "schema", branch)
 
@@ -1244,17 +1257,3 @@ def read_snapshot(
     return tagged.join(
         F.broadcast(pairs_df), on=["__dv_dir", key_col], how="left_anti"
     ).select(*df.columns)  # original column order, tag dropped
-
-
-def read_snapshot_evolved(spark, table_dir: str, version: int | None = None):
-    """Compatibility wrapper from before the readers were unified
-    (r13): delegates to :func:`read_snapshot`, preserving the old
-    contract that a version WITHOUT a schema sidecar refuses loudly
-    (the unified reader would happily serve it with physical names)."""
-    if version is None:
-        version = latest_version(table_dir)
-    if read_sidecar(table_dir, version, "schema") is None:
-        raise ValueError(
-            f"version {version} of {table_dir} has no schema sidecar"
-        )
-    return read_snapshot(spark, table_dir, version=version)

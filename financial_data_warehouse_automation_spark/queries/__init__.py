@@ -4,7 +4,10 @@ Each module covers one band of the SURVEY.md §2 inventory:
 
     relational   — scans, filters, joins (inner/outer/semi/anti), group-by
                    aggregations, rollup/cube, set ops, sorts/top-k
-    windows      — ranking, lag/lead, moving averages, YTD running totals
+    storage      — the snapshot store's demos: copy-on-write commits,
+                   time travel, change feeds, pruning sidecars, deletion
+                   vectors, schema evolution, branches and clones
+    windows     — ranking, lag/lead, moving averages, YTD running totals
     warehouse    — the reference's upsert / dedupe / QA-ledger semantics
                    re-expressed over the driver tables
     events       — date/time functions, JSON extraction, tumbling/session

@@ -8,6 +8,9 @@ DuckDB oracle; final aggregates are cast back to double.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -94,43 +97,85 @@ def assert_multiset_equal(a, b, what: str = "frames") -> None:
     assert n_diff == 0, f"{what}: {n_diff} row-groups differ in multiplicity"
 
 
-def _bucketed_dirs_via_one_write(
-    df, bucket_col: str, n_buckets: int, root: str, name_fmt: str,
-) -> dict[str, str]:
-    """Write ``df`` into ``n_buckets`` per-bucket TOP-LEVEL directories
-    (``root/<name_fmt.format(b=i)>``) with ONE Spark job.
+def range_bucket(key: str, n_buckets: int, maxck: int) -> Column:
+    """Bucket id of ``key`` under ``n_buckets`` equal-width ranges of
+    ``[0, maxck]`` — the column twin of :func:`seed_bucketed`'s
+    ``bucket_of``."""
+    return F.least(
+        F.lit(n_buckets - 1), F.floor(F.col(key) * n_buckets / (maxck + 1))
+    ).cast("int")
 
-    The snapshot demos' original per-bucket loop
-    (``df.where(bucket == b).write...`` × n) re-scanned the source
-    once per bucket — n jobs for one job's work (guide §2.4). A single
-    ``partitionBy`` write produces the same per-bucket file sets
-    (``partitionBy`` drops the bucket column from the data files,
-    exactly as the loop's ``.drop()`` did); the partition dirs then
-    RENAME into the flat per-bucket layout the demos' manifest + GC
-    asserts rely on (GC granularity is top-level entries — a nested
-    ``pb=*/`` layout would change what expire_snapshots counts).
-    Renames are same-filesystem metadata ops. Returns {bucket:int ->
-    dir}. A bucket with zero rows raises: the demos' later per-bucket
-    COW rewrites read these dirs unconditionally, and the loop form
-    produced an unreadable _SUCCESS-only dir in that case anyway —
-    loud beats silent."""
-    import os
-    import shutil
 
-    stage = os.path.join(root, "_stage_" + name_fmt.format(b="x"))
-    df.write.partitionBy(bucket_col).mode("overwrite").parquet(stage)
-    out: dict[int, str] = {}
+def seed_bucketed(df, table: str, n_buckets: int = 8, bucket_id: str = "{b}"):
+    """Write ``df`` as a snapshot table's first generation: ``ckey``
+    range-bucketed into ``n_buckets`` flat per-bucket top-level
+    directories ``table/b<i>-g1``, with ONE Spark job.
+
+    Returns ``(v1_map, bucket_of, maxck)``: ``v1_map`` maps each bucket
+    id (``bucket_id.format(b=i)``) to its directory and is what the
+    caller commits as version 1 (after staging any sidecars);
+    ``bucket_of(c)`` is the bucket index of key value ``c``; ``maxck``
+    is ``max(ckey)``.
+
+    One ``partitionBy`` write produces every bucket's file set
+    (``partitionBy`` drops the bucket column from the data files); the
+    partition dirs are then RENAMED to top-level entries, because
+    :func:`expire_snapshots` collects garbage per top-level entry — in
+    this layout GC is exact per bucket. Renames are same-filesystem
+    metadata ops. A bucket with zero rows raises: the demos' bucket
+    math assumes a populated key range."""
+    maxck = df.agg(F.max("ckey").alias("m")).collect()[0].m
+    stage = os.path.join(table, "_stage_g1")
+    df.withColumn("pb", range_bucket("ckey", n_buckets, maxck)).write \
+        .partitionBy("pb").mode("overwrite").parquet(stage)
+    v1_map: dict[str, str] = {}
     for b in range(n_buckets):
-        src = os.path.join(stage, f"{bucket_col}={b}")
+        src = os.path.join(stage, f"pb={b}")
         if not os.path.isdir(src):
             raise AssertionError(
                 f"bucket {b} of {n_buckets} got zero rows — the demo's "
                 "bucket math assumes a populated key range"
             )
-        dst = os.path.join(root, name_fmt.format(b=b))
+        dst = os.path.join(table, f"b{b}-g1")
         os.rename(src, dst)
-        out[b] = dst
+        v1_map[bucket_id.format(b=b)] = dst
     shutil.rmtree(stage)  # _SUCCESS marker and the emptied stage root
+
+    def bucket_of(c: int) -> int:
+        return min(n_buckets - 1, c * n_buckets // (maxck + 1))
+
+    return v1_map, bucket_of, maxck
+
+
+def price_cdc(upd: Column, dele: Column | None = None, bump: float = 100.0):
+    """The storage demos' CDC batch as a :func:`cow_rewrite` function:
+    drop the ``dele`` rows, then add ``bump`` to ``o_totalprice`` on
+    the ``upd`` rows."""
+
+    def fn(df):
+        if dele is not None:
+            df = df.where(~dele)
+        return df.withColumn(
+            "o_totalprice",
+            F.when(upd, F.col("o_totalprice") + bump).otherwise(
+                F.col("o_totalprice")
+            ),
+        )
+
+    return fn
+
+
+def cow_rewrite(spark, table: str, base_map: dict, buckets, fn, gen: str):
+    """Copy-on-write ``buckets`` of ``base_map``: each bucket's
+    directory goes through ``fn(DataFrame) -> DataFrame`` into a fresh
+    ``table/b<b>-<gen>``. Returns a copy of ``base_map`` with those
+    buckets re-pointed; every other bucket keeps its directory string,
+    shared verbatim with the base version."""
+    out = dict(base_map)
+    for b in buckets:
+        d = os.path.join(table, f"b{b}-{gen}")
+        fn(spark.read.parquet(base_map[str(b)])).write.parquet(d)
+        out[str(b)] = d
     return out
 
 

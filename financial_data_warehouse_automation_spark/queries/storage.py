@@ -19,8 +19,11 @@ from pyspark.sql import functions as F
 
 from financial_data_warehouse_automation_spark.functions.scalars import md5_prefix_int
 from financial_data_warehouse_automation_spark.queries._helpers import (
-    _bucketed_dirs_via_one_write,
     assert_multiset_equal,
+    cow_rewrite,
+    price_cdc,
+    range_bucket,
+    seed_bucketed,
 )
 from financial_data_warehouse_automation_spark.queries.relational import (
     _parquet_parts,
@@ -94,50 +97,28 @@ def orders_snapshot_cow_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of directory listings, snapshot expiry = dropping a
     manifest + unreferenced-file GC (the rowsink's _SUCCESS manifest
     is this same idea on the egress side), and the bucket math here
-    is any partition/clustering scheme there. Deliberately NOT
-    implemented: concurrent-writer commit arbitration (Delta's
-    optimistic log) — single-writer COW is the demonstrated
-    contract, the docstring says so honestly."""
-    import json
-
+    is any partition/clustering scheme there. This demo has one
+    writer; concurrent-writer commit arbitration (Delta's optimistic
+    log) is orders_snapshot_concurrent_commit's subject."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        read_snapshot,
+        try_commit,
+    )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
-    work = scratch_dir("snapcow_demo_")
+    table = scratch_dir("snapcow_demo_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         "o_totalprice",
         F.col("o_custkey").alias("ckey"),
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-
     # v1: one directory per customer-range bucket, manifest lists them
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-    # ONE partitioned write builds every bucket (r15: the per-bucket
-    # loop re-scanned orders n_buckets times — 8 jobs for 1 job's
-    # work); the partition dirs then RENAME into the same per-bucket
-    # top-level layout the manifest/GC asserts rely on (partitionBy
-    # drops fb from the data files exactly as .drop("fb") did)
-    base = o.withColumn("fb", fb)
-    v1_dirs = _bucketed_dirs_via_one_write(
-        base, "fb", n_buckets, work, "b{b}-v1"
-    )
-    manifest_v1 = os.path.join(work, "manifest-v1.json")
-    with open(manifest_v1, "w") as f:
-        json.dump({str(b): d for b, d in v1_dirs.items()}, f)
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
+    assert try_commit(table, 0, v1_map) == 1
 
-    def read_snapshot(manifest_path: str) -> DataFrame:
-        with open(manifest_path) as f:
-            dirs = list(json.load(f).values())
-        return spark.read.parquet(*dirs)
-
-    def agg(df: DataFrame, tag: str) -> DataFrame:
-        return df.agg(
+    def agg(version: int, tag: str) -> DataFrame:
+        return read_snapshot(spark, table, version=version).agg(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
             .cast("bigint")
@@ -146,7 +127,7 @@ def orders_snapshot_cow_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(tag).alias("snapshot"), "n_orders", "cents",
                  "n_customers")
 
-    v1_rows_before = agg(read_snapshot(manifest_v1), "v1").collect()
+    v1_rows_before = agg(1, "v1").collect()
 
     # CDC batch: update one narrow customer range, delete another —
     # the same integer window arithmetic the oracle replays
@@ -159,38 +140,20 @@ def orders_snapshot_cow_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     upd = (F.col("ckey") >= upd_lo) & (F.col("ckey") < upd_hi)
     dele = (F.col("ckey") >= del_lo) & (F.col("ckey") < del_hi)
-    v2_dirs = dict(v1_dirs)
-    for b in touched:
-        d2 = os.path.join(work, f"b{b}-v2")
-        (
-            spark.read.parquet(v1_dirs[b])
-            .where(~dele)
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.mode("overwrite")
-            .parquet(d2)
-        )
-        v2_dirs[b] = d2
-    manifest_v2 = os.path.join(work, "manifest-v2.json")
-    with open(manifest_v2, "w") as f:
-        json.dump({str(b): d for b, d in v2_dirs.items()}, f)
+    v2_map = cow_rewrite(
+        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+    )
+    assert try_commit(table, 1, v2_map) == 2
 
     # COW reuse: untouched buckets are shared verbatim between manifests
-    shared = [b for b in range(n_buckets) if v2_dirs[b] == v1_dirs[b]]
-    assert len(shared) == n_buckets - len(touched) and shared, (shared,
-                                                                touched)
+    shared = [b for b in v1_map if v2_map[b] == v1_map[b]]
+    assert len(shared) == len(v1_map) - len(touched) and shared, (shared,
+                                                                 touched)
     # isolation: v1 read through its manifest is unchanged by v2's write
-    v1_rows_after = agg(read_snapshot(manifest_v1), "v1").collect()
+    v1_rows_after = agg(1, "v1").collect()
     assert v1_rows_before == v1_rows_after, (v1_rows_before, v1_rows_after)
 
-    return (
-        agg(read_snapshot(manifest_v1), "v1")
-        .unionByName(agg(read_snapshot(manifest_v2), "v2"))
-    )
+    return agg(1, "v1").unionByName(agg(2, "v2"))
 
 
 @query(
@@ -279,11 +242,11 @@ def orders_snapshot_concurrent_commit(
         SnapshotConflict,
         expire_snapshots,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snapocc_demo_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -291,23 +254,9 @@ def orders_snapshot_concurrent_commit(
         "o_totalprice",
         F.col("o_custkey").alias("ckey"),
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-    base = o.withColumn("fb", fb)
-    # ONE partitioned write + renames (r15): was an 8-scan loop
-    v1_map = {
-        str(b): d
-        for b, d in _bucketed_dirs_via_one_write(
-            base, "fb", n_buckets, table, "b{b}-g1"
-        ).items()
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
     upd_lo, upd_hi = maxck // 8, maxck // 8 + max(1, maxck // 25)
     del_lo, del_hi = (7 * maxck) // 10, (7 * maxck) // 10 + max(
         1, maxck // 40
@@ -320,36 +269,20 @@ def orders_snapshot_concurrent_commit(
     b_base = read_manifest(table, 1)
 
     # writer A: +50 price on its range, COW over its touched buckets
-    a_map = dict(a_base)
-    for b in sorted({bucket_of(upd_lo), bucket_of(upd_hi - 1)}):
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(a_base[str(b)])
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 50.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.mode("overwrite")
-            .parquet(d2)
-        )
-        a_map[str(b)] = d2
+    a_map = cow_rewrite(
+        spark, table, a_base,
+        sorted({bucket_of(upd_lo), bucket_of(upd_hi - 1)}),
+        price_cdc(upd, bump=50.0), "g2",
+    )
     assert try_commit(table, 1, a_map) == 2
 
     # writer B: delete its range — FIRST attempt against the stale base
     def b_rewrite(src_map, gen):
-        out = dict(src_map)
-        for b in sorted({bucket_of(del_lo), bucket_of(del_hi - 1)}):
-            d2 = os.path.join(table, f"b{b}-{gen}")
-            (
-                spark.read.parquet(src_map[str(b)])
-                .where(~dele)
-                .write.mode("overwrite")
-                .parquet(d2)
-            )
-            out[str(b)] = d2
-        return out
+        return cow_rewrite(
+            spark, table, src_map,
+            sorted({bucket_of(del_lo), bucket_of(del_hi - 1)}),
+            lambda df: df.where(~dele), gen,
+        )
 
     stale_map = b_rewrite(b_base, "g2b")  # staged against the stale base
     conflicted = False
@@ -365,9 +298,8 @@ def orders_snapshot_concurrent_commit(
     assert try_commit(table, 2, b_rewrite(latest, "g3")) == 3
 
     def agg(version: int, tag: str) -> DataFrame:
-        dirs = list(read_manifest(table, version).values())
         return (
-            spark.read.parquet(*dirs)
+            read_snapshot(spark, table, version=version)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_orders"),
                 F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
@@ -467,7 +399,7 @@ def orders_compaction_snapshot_commit(
     rebases onto the new head — same loop as any writer."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         expire_snapshots,
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -504,9 +436,8 @@ def orders_compaction_snapshot_commit(
     assert try_commit(table, 0, v1_map) == 1
 
     def agg(version: int, tag: str) -> DataFrame:
-        dirs = list(read_manifest(table, version).values())
         return (
-            spark.read.parquet(*dirs)
+            read_snapshot(spark, table, version=version)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
@@ -606,31 +537,16 @@ def orders_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates over raw orders, certifying the feed row-for-row
     (exact integer cents)."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snapcdf_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
-    assert len(v1_map) == n_buckets, sorted(v1_map)
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
     upd_lo, upd_hi = maxck // 4, maxck // 4 + max(1, maxck // 20)
@@ -644,30 +560,18 @@ def orders_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
     assert len(touched) <= 4, touched
-    v2_map = dict(v1_map)
-    for b in touched:
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .where(~dele)
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        v2_map[str(b)] = d2
+    v2_map = cow_rewrite(
+        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+    )
     assert try_commit(table, 1, v2_map) == 2
 
     # the feed reads ONLY the buckets the manifest diff names
     changed = [b for b in v1_map if v2_map[b] != v1_map[b]]
     assert sorted(int(b) for b in changed) == touched, changed
-    pre = spark.read.parquet(*[v1_map[b] for b in changed]).select(
+    pre = read_snapshot(spark, table, version=1, buckets=changed).select(
         "o_orderkey", F.col("o_totalprice").alias("p_old")
     )
-    post = spark.read.parquet(*[v2_map[b] for b in changed]).select(
+    post = read_snapshot(spark, table, version=2, buckets=changed).select(
         "o_orderkey", F.col("o_totalprice").alias("p_new")
     )
     cents_old = F.round(F.col("p_old") * 100, 0).cast("bigint")
@@ -759,6 +663,7 @@ def orders_manifest_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned read must be invisible in the answer."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         plan_scan,
+        read_snapshot,
         try_commit,
         write_sidecar,
     )
@@ -769,25 +674,13 @@ def orders_manifest_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table, n_buckets)
     # per-bucket key bounds: one grouped agg, 8 rows of driver-side
     # metadata — the write path already scanned this data, a real
     # writer folds the same bounds out of its write tasks for free
     bounds = {
         str(r.pb): (r.lo, r.hi)
-        for r in o.withColumn("pb", fb)
+        for r in o.withColumn("pb", range_bucket("ckey", n_buckets, maxck))
         .groupBy("pb")
         .agg(F.min("ckey").alias("lo"), F.max("ckey").alias("hi"))
         .collect()
@@ -802,20 +695,16 @@ def orders_manifest_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reader: the shared scan planner (r13) — manifest + stats sidecar
     # -> candidate dirs, no listing of non-candidates, no footer reads
     # anywhere; the explain trace certifies pruning happened HERE
-    dirs, trace = plan_scan(
-        table, [("range", "ckey", lo, hi)], version=1, explain=True
-    )
+    preds = [("range", "ckey", lo, hi)]
+    _, trace = plan_scan(table, preds, version=1, explain=True)
     cand = trace["after_stats"]
-    expected = {
-        str(min(n_buckets - 1, c * n_buckets // (maxck + 1)))
-        for c in (lo, hi - 1)
-    }
+    expected = {str(bucket_of(c)) for c in (lo, hi - 1)}
     assert set(cand) <= {str(b) for b in range(n_buckets)}
     assert len(cand) < n_buckets, cand
     assert expected <= set(cand), (expected, cand)
 
     return (
-        spark.read.parquet(*dirs)
+        read_snapshot(spark, table, preds, version=1)
         .where((F.col("ckey") >= lo) & (F.col("ckey") < hi))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -877,31 +766,17 @@ def orders_snapshot_incremental_mv(
     in exact integer cents alongside the v1 base the deltas were
     applied to."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snapimv_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice",
         F.col("o_custkey").alias("ckey"),
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
@@ -913,9 +788,7 @@ def orders_snapshot_incremental_mv(
         )
 
     # the stored MV, computed once over snapshot v1
-    base_mv = mv_over(
-        spark.read.parquet(*read_manifest(table, 1).values())
-    )
+    base_mv = mv_over(read_snapshot(spark, table, version=1))
 
     # v2: same CDC as the change-feed demo (+100 on one range, delete
     # another), copy-on-write over the touched buckets
@@ -927,33 +800,21 @@ def orders_snapshot_incremental_mv(
         set(range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1))
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
-    v2_map = dict(v1_map)
-    for b in touched:
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .where(~dele)
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        v2_map[str(b)] = d2
+    v2_map = cow_rewrite(
+        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+    )
     assert try_commit(table, 1, v2_map) == 2
 
     # change feed from the manifest diff (changed buckets only)
     changed = [b for b in v1_map if v2_map[b] != v1_map[b]]
     assert 0 < len(changed) <= 4, changed
     cols = ["o_orderkey", "o_orderpriority", "o_totalprice"]
-    pre = spark.read.parquet(*[v1_map[b] for b in changed]).select(
+    pre = read_snapshot(spark, table, version=1, buckets=changed).select(
         cols[0],
         F.col("o_orderpriority").alias("pri_old"),
         F.col("o_totalprice").alias("p_old"),
     )
-    post = spark.read.parquet(*[v2_map[b] for b in changed]).select(
+    post = read_snapshot(spark, table, version=2, buckets=changed).select(
         cols[0],
         F.col("o_orderpriority").alias("pri_new"),
         F.col("o_totalprice").alias("p_new"),
@@ -1095,6 +956,7 @@ def orders_wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         latest_version,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -1165,7 +1027,7 @@ def orders_wap_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def agg(version: int, tag: str) -> DataFrame:
         return (
-            spark.read.parquet(*read_manifest(table, version).values())
+            read_snapshot(spark, table, version=version)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
@@ -1224,6 +1086,7 @@ def orders_manifest_bloom_point_lookup(
     arithmetic."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         plan_scan,
+        read_snapshot,
         try_commit,
         write_sidecar,
     )
@@ -1234,29 +1097,16 @@ def orders_manifest_bloom_point_lookup(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    # ONE scan for every whole-table scalar this script needs (r15:
-    # was two — maxck/count here, key max/min again further down)
-    maxck, n_total, kmax, kmin = o.agg(
-        F.max("ckey"), F.count(F.lit(1)),
-        F.max("o_orderkey"), F.min("o_orderkey"),
+    v1_map, _, maxck = seed_bucketed(o, table, n_buckets)
+    # ONE scan for every other whole-table scalar this script needs
+    n_total, kmax, kmin = o.agg(
+        F.count(F.lit(1)), F.max("o_orderkey"), F.min("o_orderkey"),
     ).collect()[0]
     # size the filter to the data, as any real per-file bloom does:
     # ~16 bits per expected key per bucket (k=3 -> ~0.5% FP). A FIXED
     # m saturates as the table grows — the sf1 sweep caught exactly
     # that (fill ratio ~1, every bucket a candidate for every key).
     m = 1 << max(14, (16 * n_total // n_buckets).bit_length())
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
 
     # per-bucket packed bloom over o_orderkey: ONE grouped agg builds
     # every bucket's word table (identical hash recipe to
@@ -1274,7 +1124,7 @@ def orders_manifest_bloom_point_lookup(
         F.lit(m),
     )
     words = (
-        o.withColumn("pb", fb)
+        o.withColumn("pb", range_bucket("ckey", n_buckets, maxck))
         .select("pb", "o_orderkey", hashes)
         .withColumn("pos", pos)
         .groupBy("pb", F.expr("pos div 32").alias("w"))
@@ -1308,7 +1158,6 @@ def orders_manifest_bloom_point_lookup(
 
     # probe: the shared scan planner (r13) — per-key Bloom pruning is
     # pure driver-side md5 arithmetic against the sidecar
-    cand_dirs: set[str] = set()
     n_probe_hits = 0
     for t in targets:
         hit_dirs, trace = plan_scan(
@@ -1316,12 +1165,15 @@ def orders_manifest_bloom_point_lookup(
         )
         assert hit_dirs, f"bloom false negative for key {t}"
         n_probe_hits += len(trace["after_bloom"])
-        cand_dirs.update(hit_dirs)
     # pruning must have happened (FPs allowed, full fan-out is a bug)
     assert n_probe_hits < len(targets) * n_buckets, n_probe_hits
 
+    # the read opens the union of the per-key candidates: an IN
+    # predicate keeps a bucket whose Bloom may hold ANY of the keys
     result = (
-        spark.read.parquet(*sorted(cand_dirs))
+        read_snapshot(
+            spark, table, [("in", "o_orderkey", targets)], version=1
+        )
         .where(F.col("o_orderkey").isin(targets))
         .select(
             "o_orderkey",
@@ -1395,29 +1247,16 @@ def orders_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         expire_snapshots,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snaprestore_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
     # the "bad" CDC batch lands as v2 (same arithmetic the oracle replays)
@@ -1429,21 +1268,9 @@ def orders_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         set(range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1))
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
-    v2_map = dict(v1_map)
-    for b in touched:
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .where(~dele)
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        v2_map[str(b)] = d2
+    v2_map = cow_rewrite(
+        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+    )
     assert try_commit(table, 1, v2_map) == 2
 
     # RESTORE: v3 = v1's mapping republished — no data movement at all
@@ -1457,7 +1284,7 @@ def orders_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def agg(version: int, tag: str) -> DataFrame:
         return (
-            spark.read.parquet(*read_manifest(table, version).values())
+            read_snapshot(spark, table, version=version)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
@@ -1662,6 +1489,7 @@ def orders_partition_spec_evolution(
     migrates old buckets opportunistically if ever worth it."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         plan_scan,
+        read_snapshot,
         try_commit,
         write_sidecar,
     )
@@ -1674,29 +1502,21 @@ def orders_partition_spec_evolution(
         F.col("o_custkey").alias("ckey"),
         F.year("o_orderdate").cast("int").alias("oyear"),
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    ck_width = (maxck + 1) / n_ck
-    fb = F.least(
-        F.lit(n_ck - 1), F.floor(F.col("ckey") * n_ck / (maxck + 1))
-    ).cast("int")
 
-    # v1: the ORIGINAL table (loads through 1997) under spec A
-    old = o.where(F.col("oyear") <= 1997)
-    root_a = os.path.join(table, "specA")
-    old.withColumn("pb", fb).write.partitionBy("pb").parquet(root_a)
-    spec: dict[str, dict] = {}
-    v1_map: dict[str, str] = {}
-    for n in os.listdir(root_a):
-        if not n.startswith("pb="):
-            continue
-        b = int(n.split("=", 1)[1])
-        bid = f"c{b}"
-        v1_map[bid] = os.path.join(root_a, n)
-        spec[bid] = {
+    # v1: the ORIGINAL table (loads through 1997) under spec A, whose
+    # custkey ranges are those of the history's own key span
+    v1_map, _, old_maxck = seed_bucketed(
+        o.where(F.col("oyear") <= 1997), table, n_ck, "c{b}"
+    )
+    ck_width = (old_maxck + 1) / n_ck
+    spec: dict[str, dict] = {
+        f"c{b}": {
             "column": "ckey",
             "lo": int(b * ck_width),
-            "hi": int((b + 1) * ck_width) if b < n_ck - 1 else maxck + 1,
+            "hi": int((b + 1) * ck_width) if b < n_ck - 1 else old_maxck + 1,
         }
+        for b in range(n_ck)
+    }
     write_sidecar(table, 1, "spec", spec)
     assert try_commit(table, 0, v1_map) == 1
 
@@ -1724,24 +1544,24 @@ def orders_partition_spec_evolution(
     # the explain trace certifies both directions
     n_old, n_new = len(v1_map), len(v2_map) - len(v1_map)
 
-    year_dirs, year_trace = plan_scan(
-        table, [("in", "oyear", [1999])], version=2, explain=True
-    )
+    year_preds = [("in", "oyear", [1999])]
+    _, year_trace = plan_scan(table, year_preds, version=2, explain=True)
     year_cand = year_trace["after_spec"]
     assert len(year_cand) == n_old + 1, (year_cand, n_old)
 
+    # the custkey window is drawn off the whole table's key span
+    maxck = o.agg(F.max("ckey")).collect()[0][0]
     lo, hi = maxck // 5, maxck // 5 + max(1, maxck // 15)
-    ck_dirs, ck_trace = plan_scan(
-        table, [("range", "ckey", lo, hi)], version=2, explain=True
-    )
+    ck_preds = [("range", "ckey", lo, hi)]
+    _, ck_trace = plan_scan(table, ck_preds, version=2, explain=True)
     ck_cand = ck_trace["after_spec"]
     n_a_hit = len([b for b in ck_cand if b.startswith("c")])
     assert n_a_hit < n_old and n_a_hit >= 1, ck_cand
     assert len(ck_cand) == n_a_hit + n_new, ck_cand
 
-    def agg(dirs: list[str], pred, tag: str) -> DataFrame:
+    def agg(preds: list, pred, tag: str) -> DataFrame:
         return (
-            spark.read.parquet(*dirs)
+            read_snapshot(spark, table, preds, version=2)
             .where(pred)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -1753,9 +1573,9 @@ def orders_partition_spec_evolution(
         )
 
     return (
-        agg(ck_dirs, (F.col("ckey") >= lo) & (F.col("ckey") < hi),
+        agg(ck_preds, (F.col("ckey") >= lo) & (F.col("ckey") < hi),
             "ckey_probe")
-        .unionByName(agg(year_dirs, F.col("oyear") == 1999, "year_probe"))
+        .unionByName(agg(year_preds, F.col("oyear") == 1999, "year_probe"))
     )
 
 
@@ -1816,6 +1636,7 @@ def orders_scan_planner_composed(
     driver, then only surviving directories touched."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         plan_scan,
+        read_snapshot,
         try_commit,
         write_sidecar,
     )
@@ -1924,9 +1745,8 @@ def orders_scan_planner_composed(
 
     # YEAR probe: spec keeps c* (cannot prune) + the one year bucket;
     # stats then kill every c* bucket (observed oyear max == 1997)
-    year_dirs, tr = plan_scan(
-        table, [("in", "oyear", [1999])], version=1, explain=True
-    )
+    year_preds = [("in", "oyear", [1999])]
+    _, tr = plan_scan(table, year_preds, version=1, explain=True)
     assert len(tr["buckets"]) == len(mapping)
     assert len(tr["after_spec"]) == n_old + 1, tr
     assert tr["after_stats"] == ["y1999"], tr
@@ -1940,9 +1760,8 @@ def orders_scan_planner_composed(
         .agg(F.max("o_orderkey"))
         .collect()[0][0]
     )
-    point_dirs, tr2 = plan_scan(
-        table, [("in", "o_orderkey", [kmid])], version=1, explain=True
-    )
+    point_preds = [("in", "o_orderkey", [kmid])]
+    point_dirs, tr2 = plan_scan(table, point_preds, version=1, explain=True)
     assert tr2["after_spec"] == tr2["buckets"], tr2  # spec: no signal
     assert point_dirs, "bloom false negative"
     assert len(tr2["after_bloom"]) < len(tr2["after_stats"]), tr2
@@ -1952,13 +1771,13 @@ def orders_scan_planner_composed(
     ).cast("bigint").alias("cents")
     n_rows = F.count(F.lit(1)).cast("long").alias("n_rows")
     year_probe = (
-        spark.read.parquet(*year_dirs)
+        read_snapshot(spark, table, year_preds, version=1)
         .where(F.col("oyear") == 1999)          # residual filter
         .agg(n_rows, cents)
         .select(F.lit("year_probe").alias("probe"), "n_rows", "cents")
     )
     point_probe = (
-        spark.read.parquet(*point_dirs)
+        read_snapshot(spark, table, point_preds, version=1)
         .where(F.col("o_orderkey") == kmid)     # residual filter
         .agg(n_rows, cents)
         .select(F.lit("point_probe").alias("probe"), "n_rows", "cents")
@@ -2036,20 +1855,7 @@ def orders_deletion_vector_merge_on_read(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table, n_buckets)
     assert try_commit(table, 0, v1_map) == 1
 
     # v2: DELETE as a deletion vector — zero data rewrite
@@ -2074,11 +1880,9 @@ def orders_deletion_vector_merge_on_read(
 
     # v3: compaction applies the DV and drops it — only touched
     # buckets rewrite; everything else is shared with v1/v2
-    v3_map = dict(v1_map)
-    for b in touched:
-        d3 = os.path.join(table, f"b{b}-g3")
-        spark.read.parquet(v1_map[str(b)]).where(~dele).write.parquet(d3)
-        v3_map[str(b)] = d3
+    v3_map = cow_rewrite(
+        spark, table, v1_map, touched, lambda df: df.where(~dele), "g3"
+    )
     assert try_commit(table, 2, v3_map) == 3
     shared = [b for b in v1_map if v3_map[b] == v1_map[b]]
     assert len(shared) == n_buckets - len(touched), shared
@@ -2146,7 +1950,7 @@ def orders_schema_evolution_snapshot(
     ADD COLUMN priority arriving WITH the 1998+ load (only the new
     bucket physically carries f3).
 
-    The reader (operators/snapshots.read_snapshot_evolved) groups
+    The reader (operators/snapshots.read_snapshot) groups
     buckets by physical field signature — one multi-dir read per
     schema GENERATION, not per bucket — projects each group to the
     version's logical names with NULL-fill, and unions (zero
@@ -2160,7 +1964,7 @@ def orders_schema_evolution_snapshot(
     manifest create; the 5-year-old history is never rewritten."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         read_manifest,
-        read_snapshot_evolved,
+        read_snapshot,
         try_commit,
         write_sidecar,
     )
@@ -2229,10 +2033,10 @@ def orders_schema_evolution_snapshot(
     assert try_commit(table, 2, v3_map) == 3
 
     # history replays under its period-correct logical schema
-    v1_read = read_snapshot_evolved(spark, table, version=1)
+    v1_read = read_snapshot(spark, table, version=1)
     assert v1_read.columns == ["o_orderkey", "price_cents"], v1_read.columns
 
-    v2_read = read_snapshot_evolved(spark, table, version=2)
+    v2_read = read_snapshot(spark, table, version=2)
     assert v2_read.columns == ["o_orderkey", "revenue_cents"]
     v2_rows = v2_read.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -2243,7 +2047,7 @@ def orders_schema_evolution_snapshot(
     )
 
     v3_rows = (
-        read_snapshot_evolved(spark, table, version=3)
+        read_snapshot(spark, table, version=3)
         .groupBy(F.coalesce(F.col("priority"), F.lit("(none)"))
                  .alias("priority"))
         .agg(
@@ -2331,39 +2135,26 @@ def orders_branch_wap_fastforward(
         expire_snapshots,
         latest_version,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snapbranch_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
-    def agg_of(mapping: dict[str, str]) -> tuple:
-        r = spark.read.parquet(*mapping.values()).agg(
+    def agg_of(version: int | None = None) -> tuple:
+        r = read_snapshot(spark, table, version=version).agg(
             F.count(F.lit(1)),
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")),
         ).collect()[0]
         return (r[0], r[1])
 
-    main_v1_agg = agg_of(v1_map)
+    main_v1_agg = agg_of(1)
     dirs_before = {n for n in os.listdir(table) if os.path.isdir(
         os.path.join(table, n))}
 
@@ -2377,31 +2168,22 @@ def orders_branch_wap_fastforward(
     # the risky CDC lands on the BRANCH (COW over touched buckets)
     upd_lo, upd_hi = maxck // 4, maxck // 4 + max(1, maxck // 20)
     upd = (F.col("ckey") >= upd_lo) & (F.col("ckey") < upd_hi)
-    etl_map = dict(v1_map)
-    for b in range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1):
-        d2 = os.path.join(table, f"b{b}-etl")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        etl_map[str(b)] = d2
+    etl_map = cow_rewrite(
+        spark, table, v1_map,
+        range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1),
+        price_cdc(upd), "etl",
+    )
     assert try_commit(table, 1, etl_map, branch="etl") == 2
 
     # main is byte-untouched while the branch carries the work
     assert latest_version(table) == 1
     assert read_manifest(table) == v1_map
-    assert agg_of(read_manifest(table)) == main_v1_agg
+    assert agg_of() == main_v1_agg
 
     # audit the branch head; it passes -> FAST-FORWARD main
     branch_head = read_manifest(table, branch="etl")
     n_nulls = (
-        spark.read.parquet(*branch_head.values())
+        read_snapshot(spark, table, branch="etl")
         .where(F.col("o_orderkey").isNull()).count()
     )
     assert n_nulls == 0
@@ -2419,7 +2201,7 @@ def orders_branch_wap_fastforward(
     bad_map["0"] = d_bad
     assert try_commit(table, 1, bad_map, branch="bad") == 2
     poisoned = (
-        spark.read.parquet(*read_manifest(table, branch="bad").values())
+        read_snapshot(spark, table, branch="bad")
         .where(F.col("o_orderkey").isNull()).count()
     )
     assert poisoned > 0  # audit fails -> never fast-forwarded
@@ -2431,7 +2213,7 @@ def orders_branch_wap_fastforward(
     assert (removed_m, removed_d) == (0, 1), (removed_m, removed_d)
     assert not os.path.exists(d_bad)
     assert all(os.path.exists(d) for d in branch_head.values())
-    assert agg_of(read_manifest(table, 1)) == main_v1_agg
+    assert agg_of(1) == main_v1_agg
 
     # r14: branch-aware TIME TRAVEL — the branch has its OWN snapshot
     # log, so an instant between the cut and the CDC resolves to the
@@ -2458,17 +2240,18 @@ def orders_branch_wap_fastforward(
     assert latest_version(table) == 2
     assert read_manifest(table, 1) == v1_map
 
-    def agg(mapping: dict[str, str], tag: str) -> DataFrame:
-        return spark.read.parquet(*mapping.values()).agg(
+    def agg(tag: str, version: int | None = None, branch: str = "main"):
+        df = read_snapshot(spark, table, version=version, branch=branch)
+        return df.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
             .cast("bigint").alias("cents"),
         ).select(F.lit(tag).alias("snapshot"), "n_rows", "cents")
 
     return (
-        agg(read_manifest(table, branch="etl"), "branch_head")
-        .unionByName(agg(read_manifest(table, 1), "main_v1"))
-        .unionByName(agg(read_manifest(table, 2), "main_v2"))
+        agg("branch_head", branch="etl")
+        .unionByName(agg("main_v1", 1))
+        .unionByName(agg("main_v2", 2))
     )
 
 
@@ -2526,6 +2309,7 @@ def orders_shallow_clone_divergence(
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         expire_snapshots,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -2539,20 +2323,7 @@ def orders_shallow_clone_divergence(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(src_t, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, src_t, n_buckets)
     assert try_commit(src_t, 0, v1_map) == 1
 
     # the clone: one manifest, zero data — a new table born at v1
@@ -2566,11 +2337,11 @@ def orders_shallow_clone_divergence(
     # clone diverges: DELETE a range, COW into the CLONE's own dirs
     del_lo, del_hi = (3 * maxck) // 5, (3 * maxck) // 5 + max(1, maxck // 50)
     dele = (F.col("ckey") >= del_lo) & (F.col("ckey") < del_hi)
-    c_map = dict(v1_map)
-    for b in range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1):
-        d = os.path.join(clone_t, f"b{b}-c2")
-        spark.read.parquet(v1_map[str(b)]).where(~dele).write.parquet(d)
-        c_map[str(b)] = d
+    c_map = cow_rewrite(
+        spark, clone_t, v1_map,
+        range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1),
+        lambda df: df.where(~dele), "c2",
+    )
     assert try_commit(clone_t, 1, c_map) == 2
     shared = [b for b in v1_map if c_map[b] == v1_map[b]]
     assert len(shared) >= n_buckets - 2  # unchanged buckets still shared
@@ -2581,20 +2352,9 @@ def orders_shallow_clone_divergence(
     upd_buckets = [
         str(b) for b in range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1)
     ]
-    s_map = dict(v1_map)
-    for b in upd_buckets:
-        d = os.path.join(src_t, f"b{b}-s2")
-        (
-            spark.read.parquet(v1_map[b])
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d)
-        )
-        s_map[b] = d
+    s_map = cow_rewrite(
+        spark, src_t, v1_map, upd_buckets, price_cdc(upd), "s2"
+    )
     assert try_commit(src_t, 1, s_map) == 2
 
     # the hazard, demonstrated: after source retention, the updated
@@ -2613,9 +2373,7 @@ def orders_shallow_clone_divergence(
     assert all(os.path.exists(d) for d in at_risk)
 
     def agg(table: str, tag: str) -> DataFrame:
-        return spark.read.parquet(
-            *read_manifest(table).values()
-        ).agg(
+        return read_snapshot(spark, table).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
             .cast("bigint").alias("cents"),
@@ -2702,31 +2460,17 @@ def orders_snapshot_describe_history(
     manifests, so the audit costs one logical pass over live data,
     not one per version."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_manifest,
+        read_snapshot,
         table_history,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snaphist_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(
         table, 0, v1_map,
         meta={"_committed_at": 1000.0, "_writer": "loader"},
@@ -2739,28 +2483,16 @@ def orders_snapshot_describe_history(
     ubs = set(range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1))
     dbs = set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     assert not (ubs & dbs)  # the oracle's touched-count sum needs this
-    v2_map = dict(v1_map)
-    for b in sorted(ubs | dbs):
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .where(~dele)
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        v2_map[str(b)] = d2
+    v2_map = cow_rewrite(
+        spark, table, v1_map, sorted(ubs | dbs), price_cdc(upd, dele), "g2"
+    )
     assert try_commit(
         table, 1, v2_map,
         meta={"_committed_at": 2000.0, "_writer": "cdc"},
     ) == 2
 
     d3 = os.path.join(table, "compact-g3")
-    spark.read.parquet(*v2_map.values()).coalesce(4).write.parquet(d3)
+    read_snapshot(spark, table, version=2).coalesce(4).write.parquet(d3)
     assert try_commit(
         table, 2, {"all": d3},
         meta={"_committed_at": 3000.0, "_writer": "maintenance"},
@@ -2777,9 +2509,7 @@ def orders_snapshot_describe_history(
     parts = []
     for h in hist:
         parts.append(
-            spark.read.parquet(
-                *read_manifest(table, h["version"]).values()
-            ).agg(
+            read_snapshot(spark, table, version=h["version"]).agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.sum(
                     F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
@@ -2869,30 +2599,16 @@ def orders_snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata operation in this store."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         as_of_version,
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    n_buckets = 8
     table = scratch_dir("snapasof_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map,
                       meta={"_committed_at": 1000.0}) == 1
 
@@ -2902,29 +2618,20 @@ def orders_snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     dele = (F.col("ckey") >= del_lo) & (F.col("ckey") < del_hi)
 
     # v2: the +100 update, COW on its buckets
-    v2_map = dict(v1_map)
-    for b in range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1):
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        v2_map[str(b)] = d2
+    v2_map = cow_rewrite(
+        spark, table, v1_map,
+        range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1),
+        price_cdc(upd), "g2",
+    )
     assert try_commit(table, 1, v2_map,
                       meta={"_committed_at": 2000.0}) == 2
 
     # v3: the delete, COW on its buckets
-    v3_map = dict(v2_map)
-    for b in range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1):
-        d3 = os.path.join(table, f"b{b}-g3")
-        spark.read.parquet(v2_map[str(b)]).where(~dele).write.parquet(d3)
-        v3_map[str(b)] = d3
+    v3_map = cow_rewrite(
+        spark, table, v2_map,
+        range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1),
+        lambda df: df.where(~dele), "g3",
+    )
     assert try_commit(
         table, 2, v3_map, meta={"_committed_at": 3000.0}
     ) == 3
@@ -2942,7 +2649,7 @@ def orders_snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     def agg(ts: float, tag: str) -> DataFrame:
         v = as_of_version(table, ts)
         return (
-            spark.read.parquet(*read_manifest(table, v).values())
+            read_snapshot(spark, table, version=v)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
@@ -3040,20 +2747,7 @@ def orders_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table, n_buckets)
     assert try_commit(table, 0, v1_map) == 1
 
     # v2: the MoR UPDATE — DV on the old keys + post-image bucket,
@@ -3076,7 +2770,7 @@ def orders_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert any(doomed.values()), "update range selected nothing"
     d_post = os.path.join(table, "u2")
     (
-        spark.read.parquet(*[v1_map[str(b)] for b in touched])
+        read_snapshot(spark, table, version=1, buckets=touched)
         .where(upd)
         .withColumn("o_totalprice", F.col("o_totalprice") + 100.0)
         .coalesce(1)
@@ -3141,6 +2835,7 @@ def orders_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v3: compaction folds the update — touched buckets rewrite with
     # their post-images merged home, u2 and the DV retire together
+    fb = range_bucket("ckey", n_buckets, maxck)
     v3_map = dict(v1_map)
     for b in touched:
         d3 = os.path.join(table, f"b{b}-g3")
@@ -3421,7 +3116,7 @@ def orders_commit_check_constraints(
         check_constraints,
         expire_snapshots,
         latest_version,
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -3471,17 +3166,14 @@ def orders_commit_check_constraints(
     _, removed_d = expire_snapshots(table, keep_from=1)
     assert removed_d == 1 and not os.path.exists(d_bad)
 
-    def agg(mapping: dict[str, str], tag: str) -> DataFrame:
-        return spark.read.parquet(*mapping.values()).agg(
+    def agg(version: int | None, tag: str) -> DataFrame:
+        return read_snapshot(spark, table, version=version).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
             .cast("bigint").alias("cents"),
         ).select(F.lit(tag).alias("snapshot"), "n_rows", "cents")
 
-    return (
-        agg(read_manifest(table), "head")
-        .unionByName(agg(read_manifest(table, 1), "v1"))
-    )
+    return agg(None, "head").unionByName(agg(1, "v1"))
 
 
 @query(
@@ -3705,6 +3397,7 @@ def orders_concurrent_same_bucket_merge(
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         latest_version,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import (
@@ -3778,7 +3471,7 @@ def orders_concurrent_same_bucket_merge(
     assert latest_version(table) == 3
     # history isolation: B's v2 carries B's effect but NOT A's —
     # A's keys still read their v1 base values at v2
-    v2 = spark.read.parquet(*read_manifest(table, 2).values())
+    v2 = read_snapshot(spark, table, version=2)
     assert v2.where(F.col("okey") % 10 == 7).join(
         o.withColumnRenamed("cents", "base_cents"), "okey"
     ).where(F.col("cents") != F.col("base_cents")).count() == 0
@@ -3794,7 +3487,7 @@ def orders_concurrent_same_bucket_merge(
     for bkt in ("0", "2", "4", "6"):
         assert v3_map[bkt] == v1_map[bkt], bkt
 
-    final = spark.read.parquet(*v3_map.values())
+    final = read_snapshot(spark, table, version=3)
     n_rival = final.where(
         (F.col("okey") % 8 == 3) & (F.col("okey") % 10 == 5)
     ).count()
@@ -3869,6 +3562,7 @@ def orders_sorted_merge_keep_last(
     metadata contract."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         read_manifest,
+        read_snapshot,
         table_sort_order,
         try_commit,
     )
@@ -3931,7 +3625,7 @@ def orders_sorted_merge_keep_last(
                 return None  # a key's rows could span files
             if os.path.getsize(os.path.join(d, files[0])) >= split_bytes:
                 return None  # Spark would split the file mid-key
-        src = spark.read.parquet(*[mani[b] for b in sorted(mani)])
+        src = read_snapshot(spark, table, version=version)
 
         def fold(it):
             import pandas as pd
@@ -3965,7 +3659,7 @@ def orders_sorted_merge_keep_last(
     assert "Sort" not in plan, plan      # zero re-sort
 
     control = (
-        spark.read.parquet(*v1_map.values())
+        read_snapshot(spark, table, version=1)
         .withColumn(
             "rn",
             F.row_number().over(

@@ -32,7 +32,11 @@ from pyspark.sql import functions as F
 
 from financial_data_warehouse_automation_spark.queries._helpers import (
     assert_multiset_equal,
+    cow_rewrite,
     money,
+    price_cdc,
+    range_bucket,
+    seed_bucketed,
 )
 from financial_data_warehouse_automation_spark.registry import query
 from financial_data_warehouse_automation_spark.streaming.pipeline import sessionize_stream
@@ -880,6 +884,7 @@ def events_stream_snapshot_commit(
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         latest_version,
         read_manifest,
+        read_snapshot,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
     from financial_data_warehouse_automation_spark.streaming.pipeline import (
@@ -926,8 +931,7 @@ def events_stream_snapshot_commit(
     assert sorted(os.listdir(table)) == listing_before
 
     return (
-        spark.read.schema("ts timestamp, user_id long, event_type string")
-        .parquet(*final.values())
+        read_snapshot(spark, table, version=n_batches)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -1006,7 +1010,7 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
     space, so no shuffle); unchanged buckets are never planned. The
     oracle replays both commits' typed rows from raw orders."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -1015,27 +1019,13 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from financial_data_warehouse_automation_spark.tables import load_table
 
-    n_buckets = 8
     work = scratch_dir("cdfsub_")
     table = os.path.join(work, "table")
     os.makedirs(table)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
     # subscribe at v1: the consumer sees commits, not history
@@ -1086,21 +1076,10 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert not (upd_buckets & del_buckets), \
             "CDC buckets must be disjoint"
-        v2_map = dict(v1_map)
-        for b in sorted(upd_buckets | del_buckets):
-            d2 = os.path.join(table, f"b{b}-g2")
-            (
-                spark.read.parquet(v1_map[str(b)])
-                .where(~dele)
-                .withColumn(
-                    "o_totalprice",
-                    F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                        F.col("o_totalprice")
-                    ),
-                )
-                .write.parquet(d2)
-            )
-            v2_map[str(b)] = d2
+        v2_map = cow_rewrite(
+            spark, table, v1_map, sorted(upd_buckets | del_buckets),
+            price_cdc(upd, dele), "g2",
+        )
         assert try_commit(table, 1, v2_map) == 2
         live.processAllAvailable()  # picks up v2 as its own micro-batch
 
@@ -1161,9 +1140,7 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("change_type") == "delete", -1).otherwise(0)
 
     def totals(version: int, tag: str) -> DataFrame:
-        return spark.read.parquet(
-            *read_manifest(table, version).values()
-        ).agg(
+        return read_snapshot(spark, table, version=version).agg(
             F.lit(tag).alias("t"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum(
@@ -1257,8 +1234,8 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feed itself plans one task per changed source bucket."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         latest_version,
-        read_manifest,
         read_manifest_meta,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -1270,7 +1247,6 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from financial_data_warehouse_automation_spark.tables import load_table
 
-    n_buckets = 8
     work = scratch_dir("cdfrepl_")
     a_t = os.path.join(work, "a")
     b_t = os.path.join(work, "b")
@@ -1279,20 +1255,7 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(a_t, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, a_t)
     assert try_commit(a_t, 0, v1_map) == 1
 
     def merge(prev: DataFrame, batch: DataFrame) -> DataFrame:
@@ -1367,21 +1330,9 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             set(range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1))
             | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
         )
-        v2_map = dict(v1_map)
-        for b in touched:
-            d2 = os.path.join(a_t, f"b{b}-g2")
-            (
-                spark.read.parquet(v1_map[str(b)])
-                .where(~dele)
-                .withColumn(
-                    "o_totalprice",
-                    F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                        F.col("o_totalprice")
-                    ),
-                )
-                .write.parquet(d2)
-            )
-            v2_map[str(b)] = d2
+        v2_map = cow_rewrite(
+            spark, a_t, v1_map, touched, price_cdc(upd, dele), "g2"
+        )
         assert try_commit(a_t, 1, v2_map) == 2
         # r16 NEGATIVE RESULT, kept as the r15 explicit drain: removing
         # this drain to get a "single catching-up micro-batch" over
@@ -1397,16 +1348,8 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         v3_map = dict(v2_map)
         for b in range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1):
             d3 = os.path.join(a_t, f"b{b}-g3")
-            (
-                spark.read.parquet(v1_map[str(b)])
-                .withColumn(
-                    "o_totalprice",
-                    F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                        F.col("o_totalprice")
-                    ),
-                )
-                .write.parquet(d3)
-            )
+            post = price_cdc(upd)(spark.read.parquet(v1_map[str(b)]))
+            post.write.parquet(d3)
             v3_map[str(b)] = d3
         assert try_commit(a_t, 2, v3_map) == 3
         live.processAllAvailable()
@@ -1416,10 +1359,10 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # exact replication: A head == B head, both directions, over the
     # FULL wide row (all three columns, not a key-value projection)
-    a_head = spark.read.parquet(*read_manifest(a_t).values()).select(
+    a_head = read_snapshot(spark, a_t).select(
         "o_orderkey", "o_totalprice", "ckey"
     )
-    b_head = spark.read.parquet(*read_manifest(b_t).values()).select(
+    b_head = read_snapshot(spark, b_t).select(
         "o_orderkey", "o_totalprice", "ckey"
     )
     # one-action signed-count multiset equality (was exceptAll both
@@ -1502,6 +1445,7 @@ def orders_cdf_replica_bucketed(
         latest_version,
         read_manifest,
         read_manifest_meta,
+        read_snapshot,
         table_history,
         try_commit,
     )
@@ -1523,23 +1467,11 @@ def orders_cdf_replica_bucketed(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of_val = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
+    v1_map, bucket_of_val, maxck = seed_bucketed(o, a_t, n_buckets)
+    assert try_commit(a_t, 0, v1_map) == 1
 
     def bucket_of(df: DataFrame):
-        return F.least(
-            F.lit(n_buckets - 1),
-            F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-        ).cast("int")
-
-    root = os.path.join(a_t, "g1")
-    o.withColumn("pb", bucket_of(o)).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
-    assert try_commit(a_t, 0, v1_map) == 1
+        return range_bucket("ckey", n_buckets, maxck)
 
     def merge(prev: DataFrame, batch: DataFrame) -> DataFrame:
         # key-terminal fold over the TOUCHED buckets only: highest
@@ -1614,21 +1546,9 @@ def orders_cdf_replica_bucketed(
             | set(range(bucket_of_val(del_lo), bucket_of_val(del_hi - 1) + 1))
         )
         assert len(touched) < n_buckets, "churn must be partial"
-        v2_map = dict(v1_map)
-        for b in touched:
-            d2 = os.path.join(a_t, f"b{b}-g2")
-            (
-                spark.read.parquet(v1_map[str(b)])
-                .where(~dele)
-                .withColumn(
-                    "o_totalprice",
-                    F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                        F.col("o_totalprice")
-                    ),
-                )
-                .write.parquet(d2)
-            )
-            v2_map[str(b)] = d2
+        v2_map = cow_rewrite(
+            spark, a_t, v1_map, touched, price_cdc(upd, dele), "g2"
+        )
         assert try_commit(a_t, 1, v2_map) == 2
         drain()
 
@@ -1650,16 +1570,8 @@ def orders_cdf_replica_bucketed(
         v3_map = dict(v2_map)
         for b in del_buckets:
             d3 = os.path.join(a_t, f"b{b}-g3")
-            (
-                spark.read.parquet(v1_map[str(b)])
-                .withColumn(
-                    "o_totalprice",
-                    F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                        F.col("o_totalprice")
-                    ),
-                )
-                .write.parquet(d3)
-            )
+            post = price_cdc(upd)(spark.read.parquet(v1_map[str(b)]))
+            post.write.parquet(d3)
             v3_map[str(b)] = d3
         assert try_commit(a_t, 2, v3_map) == 3
         drain()
@@ -1683,10 +1595,10 @@ def orders_cdf_replica_bucketed(
     assert read_manifest_meta(b_t).get("_txn", {}).get("cdf") is not None
 
     # exact replication over the full wide row, both directions
-    a_head = spark.read.parquet(*read_manifest(a_t).values()).select(
+    a_head = read_snapshot(spark, a_t).select(
         "o_orderkey", "o_totalprice", "ckey"
     )
-    b_head = spark.read.parquet(*read_manifest(b_t).values()).select(
+    b_head = read_snapshot(spark, b_t).select(
         "o_orderkey", "o_totalprice", "ckey"
     )
     # one-action signed-count multiset equality (was counts +
@@ -1770,7 +1682,7 @@ def orders_cdf_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     task per changed bucket; history never rewrites — append-only by
     construction."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -1779,27 +1691,13 @@ def orders_cdf_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from financial_data_warehouse_automation_spark.tables import load_table
 
-    n_buckets = 8
     work = scratch_dir("cdfscd2_")
     table = os.path.join(work, "table")
     os.makedirs(table)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.col("o_custkey").alias("ckey")
     )
-    maxck = o.agg(F.max("ckey").alias("m")).collect()[0].m
-    bucket_of = lambda c: min(n_buckets - 1, c * n_buckets // (maxck + 1))
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("ckey") * n_buckets / (maxck + 1)),
-    ).cast("int")
-
-    root = os.path.join(table, "g1")
-    o.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
-    v1_map = {
-        n.split("=", 1)[1]: os.path.join(root, n)
-        for n in os.listdir(root)
-        if n.startswith("pb=")
-    }
+    v1_map, bucket_of, maxck = seed_bucketed(o, table)
     assert try_commit(table, 0, v1_map) == 1
 
     # v2: +100 update on one range AND a disjoint delete, one commit
@@ -1811,21 +1709,9 @@ def orders_cdf_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         set(range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1))
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
-    v2_map = dict(v1_map)
-    for b in touched:
-        d2 = os.path.join(table, f"b{b}-g2")
-        (
-            spark.read.parquet(v1_map[str(b)])
-            .where(~dele)
-            .withColumn(
-                "o_totalprice",
-                F.when(upd, F.col("o_totalprice") + 100.0).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .write.parquet(d2)
-        )
-        v2_map[str(b)] = d2
+    v2_map = cow_rewrite(
+        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+    )
     assert try_commit(table, 1, v2_map) == 2
 
     # v3: zero-copy re-insert of the deleted buckets
@@ -1879,9 +1765,7 @@ def orders_cdf_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the current slice IS the head read — SCD2 supersets the replica
     cur = scd2.where("is_current").select("o_orderkey", "o_totalprice")
-    head = spark.read.parquet(*read_manifest(table).values()).select(
-        "o_orderkey", "o_totalprice"
-    )
+    head = read_snapshot(spark, table).select("o_orderkey", "o_totalprice")
     # one-action signed-count multiset equality (was counts +
     # exceptAll: 3 actions, each re-folding the SCD2 window)
     assert_multiset_equal(cur, head, "SCD2 current slice vs head")
@@ -2121,9 +2005,9 @@ def orders_cdf_schema_evolution_feed(
     a_head = read_snapshot(spark, a_t).select(
         "okey", "revenue_cents", "priority"
     )
-    b_head = spark.read.parquet(
-        *read_manifest(b_t).values()
-    ).select("okey", "revenue_cents", "priority")
+    b_head = read_snapshot(spark, b_t).select(
+        "okey", "revenue_cents", "priority"
+    )
     # one-action signed-count multiset equality (was exceptAll both
     # directions: 2 actions)
     assert_multiset_equal(a_head, b_head, "evolved feed replica vs head")
@@ -2174,7 +2058,7 @@ def orders_cdf_schema_evolution_feed(
             ).cast("bigint").alias("c"),
         )
         .unionByName(
-            spark.read.parquet(*v1b.values()).agg(
+            read_snapshot(spark, a_t, version=1, branch="audit").agg(
                 F.lit("base").alias("t"),
                 F.count(F.lit(1)).cast("bigint").alias("a"),
                 nul.alias("b"), nul.alias("c"),

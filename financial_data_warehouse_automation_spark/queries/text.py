@@ -303,16 +303,6 @@ def doc_jaccard_pairs_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Deprecated alias for the most recent Observation attached by
-# doc_minhash_lsh_pairs. The per-build handle is the API: the query
-# stashes its Observation on the returned DataFrame as
-# ``df.lsh_cap_observation`` (r8 advisor finding — a shared global
-# orphans the prior build's Observation if the query is built twice
-# before either runs, and races under concurrent builds). This module
-# global still tracks the LATEST build for the sequential harness.
-last_lsh_cap_observation = None
-
-
 @query("doc_minhash_lsh_pairs", headline=True, tags=("text", "dedup", "minhash", "lsh"))
 def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=64) + banded LSH (16 bands × 4 rows ⇒ ~0.5 Jaccard
@@ -338,8 +328,7 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Observation (r8+r9 advisor findings; the observe node measured
     free on this box — interleaved min-of-5 at sf0.1: 1.53s with vs
     1.59s without, i.e. inside noise, unlike the r6 always-on
-    variant). ``last_lsh_cap_observation`` mirrors the latest build
-    for the sequential harness."""
+    variant)."""
     from pyspark.sql import Observation
 
     # Single-row-group parquet = one input partition; spread the
@@ -364,8 +353,6 @@ def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,
     )
     obs = Observation("lsh_cap_metrics")
-    global last_lsh_cap_observation
-    last_lsh_cap_observation = obs
     cands = lsh_candidate_pairs(
         sigs.select("doc_id", "signature"), "doc_id", bands=16, rows=4,
         observation=obs,
@@ -3359,9 +3346,7 @@ def doc_takedown_feed_propagation(
     q.awaitTermination()
 
     # subscription-maintained compliance == scan-time compliance
-    b_head = spark.read.parquet(
-        *read_manifest(b_t).values()
-    ).select(*idx_cols)
+    b_head = read_snapshot(spark, b_t).select(*idx_cols)
     a_proj = head.select(*idx_cols)
     # one-action signed-count multiset equality (was exceptAll both
     # directions: 2 actions, each re-reading both heads)

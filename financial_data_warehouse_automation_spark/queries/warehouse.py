@@ -211,6 +211,7 @@ def warehouse_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         SnapshotConflict,
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -247,9 +248,8 @@ def warehouse_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert try_commit(table, 0, v1_map) == 1
 
     def agg(version: int, tag: str) -> DataFrame:
-        dirs = list(read_manifest(table, version).values())
         return (
-            spark.read.parquet(*dirs)
+            read_snapshot(spark, table, version=version)
             .groupBy("year", "src")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_keys"),

@@ -846,6 +846,7 @@ def snapshot_state_commit_batch(table_dir: str, merge, writer_id: str = "cdf"):
         latest_version,
         read_manifest,
         read_manifest_meta,
+        read_snapshot,
         try_commit,
     )
 
@@ -862,10 +863,12 @@ def snapshot_state_commit_batch(table_dir: str, merge, writer_id: str = "cdf"):
         while True:  # (re-)fold loop: runs again when the base moved
             latest = latest_version(table_dir)
             fold_base = (
-                read_manifest(table_dir) if latest > 0 else {}
+                read_manifest(table_dir, latest) if latest > 0 else {}
             )
+            # the previous state through the one reader, so a deletion
+            # vector or column mapping on it is honored by the fold
             prev = (
-                spark.read.parquet(*fold_base.values())
+                read_snapshot(spark, table_dir, version=latest)
                 if fold_base else None
             )
             d = os.path.join(table_dir, f"{writer_id}-state-{batch_id}")
@@ -945,6 +948,7 @@ def snapshot_partitioned_state_commit_batch(
         latest_version,
         read_manifest,
         read_manifest_meta,
+        read_snapshot,
         try_commit,
     )
 
@@ -969,15 +973,15 @@ def snapshot_partitioned_state_commit_batch(
         attempt = 0
         while True:  # (re-)fold loop: runs again when a touched
             # bucket moved under us between fold and commit
-            mapping = (
-                read_manifest(table_dir)
-                if latest_version(table_dir) > 0 else {}
-            )
+            latest = latest_version(table_dir)
+            mapping = read_manifest(table_dir, latest) if latest > 0 else {}
             # the exact (bucket -> dir) state this fold reads; the
             # commit loop refuses to publish if it changed
             fold_base = {str(b): mapping.get(str(b)) for b in touched}
-            prev_dirs = [d for d in fold_base.values() if d]
-            prev = spark.read.parquet(*prev_dirs) if prev_dirs else None
+            prev_buckets = [b for b, d in fold_base.items() if d]
+            prev = read_snapshot(
+                spark, table_dir, version=latest, buckets=prev_buckets
+            ) if prev_buckets else None
             # attempt-suffixed root: a re-fold must not overwrite a
             # directory a rival's manifest could meanwhile reference
             suffix = f"-r{attempt}" if attempt else ""

@@ -57,13 +57,3 @@ def test_audit_mode_exposes_precut_stages(spark, sf_dir, monkeypatch):
     prod_plan = part_basket_affinity(spark, sf_dir)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "ExistingRDD" in prod_plan
-
-
-def test_deprecated_no_checkpoint_alias_still_audits(spark, monkeypatch):
-    """SPARK_GRAFT_NO_CHECKPOINT=1 (the pre-r10 flag name) must keep
-    working as an alias for SPARK_GRAFT_PLAN_AUDIT — external scripts
-    and muscle memory reference it; the rename (r9 advisor finding)
-    only makes the plans-only contract explicit in the name."""
-    df = spark.range(3).select(F.col("id"))
-    monkeypatch.setenv("SPARK_GRAFT_NO_CHECKPOINT", "1")
-    assert cut(df, eager=False) is df

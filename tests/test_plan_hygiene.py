@@ -505,3 +505,36 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     assert any(
         "SortMergeJoin(skew=true)" in ln for ln in plan.splitlines()
     ), "AQE did not split the hot partition — skew-join lever broken"
+
+
+def test_no_snapshot_read_bypasses_read_snapshot():
+    """Committed snapshots are read through operators.snapshots'
+    read_snapshot, which applies deletion vectors and column mapping.
+    A star-splat ``spark.read.parquet(*dirs)`` over bucket directories
+    under queries/ or streaming/ skips both; only a read of staged,
+    not-yet-committed directories may stay raw, and its line says so
+    with ``# pre-commit read``."""
+    import ast
+    import pathlib
+
+    import financial_data_warehouse_automation_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    bypasses = []
+    for sub in ("queries", "streaming"):
+        for path in sorted((root / sub).rglob("*.py")):
+            src = path.read_text()
+            lines = src.splitlines()
+            for node in ast.walk(ast.parse(src)):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and re.search(r"\bread\b", ast.unparse(node.func.value))
+                    and any(isinstance(a, ast.Starred) for a in node.args)
+                ):
+                    continue
+                span = lines[node.lineno - 1:node.end_lineno]
+                if not any("# pre-commit read" in ln for ln in span):
+                    bypasses.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not bypasses, bypasses

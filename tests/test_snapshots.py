@@ -712,15 +712,13 @@ def test_read_snapshot_applies_deletion_vector(spark, tmp_path):
     assert got == [k for k in range(10) if k not in (3, 4)]
 
 
-def test_read_snapshot_evolved_rename_and_add_column(spark, tmp_path):
-    """Column-mapping reader: rename rebinds a logical name to the
-    same physical field (values unchanged), an added field null-fills
-    buckets that predate it, generations sharing a signature read as
-    one group, and a version without a schema sidecar raises."""
-    import pytest as _pytest
-
+def test_read_snapshot_column_mapping_rename_and_add_column(spark, tmp_path):
+    """Column-mapping read: rename rebinds a logical name to the same
+    physical field (values unchanged), an added field null-fills
+    buckets that predate it, and generations sharing a signature read
+    as one group."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_snapshot_evolved,
+        read_snapshot,
         try_commit,
         write_sidecar,
     )
@@ -745,27 +743,16 @@ def test_read_snapshot_evolved_rename_and_add_column(spark, tmp_path):
     })
     try_commit(table, 1, {"old": d_old, "new": d_new})
 
-    v1 = read_snapshot_evolved(spark, table, version=1)
+    v1 = read_snapshot(spark, table, version=1)
     assert v1.columns == ["k", "amount"]
     assert sorted(r.amount for r in v1.collect()) == [0, 100, 200, 300, 400]
 
-    v2 = read_snapshot_evolved(spark, table, version=2)
+    v2 = read_snapshot(spark, table, version=2)
     assert v2.columns == ["k", "total", "tag"]
     rows = {r.k: (r.total, r.tag) for r in v2.collect()}
     assert rows[2] == (200, None)        # old bucket: added field NULL
     assert rows[6] == (600, "P")         # new bucket carries it
     assert len(rows) == 8
-
-    # a table that NEVER had a schema sidecar refuses, loudly (on the
-    # evolved table itself a later commit now INHERITS the sidecar via
-    # try_commit's carry-forward — pinned in the carry-forward tests)
-    bare_table = os.path.join(table, "bare_table")
-    os.makedirs(bare_table)
-    d_bare = os.path.join(bare_table, "bare")
-    spark.range(1).write.parquet(d_bare)
-    try_commit(bare_table, 0, {"bare": d_bare})
-    with _pytest.raises(ValueError, match="no schema sidecar"):
-        read_snapshot_evolved(spark, bare_table, version=1)
 
 
 def test_branch_protocol_isolation_and_gc(tmp_path):
@@ -885,6 +872,64 @@ def test_snapshot_state_commit_batch_folds_and_replays(spark, tmp_path):
     fn(poison, 1)
     assert sorted(os.listdir(table)) == before
     assert latest_version(table) == 2
+
+
+def test_state_folds_honor_deletion_vector_of_previous_state(spark, tmp_path):
+    """Both streaming state folds read the previous state through
+    read_snapshot at the version they fold against, so a key deleted
+    by that version's deletion vector stays deleted in the next one
+    instead of coming back from the raw bucket files."""
+    from pyspark.sql import functions as F
+
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        read_snapshot,
+    )
+    from financial_data_warehouse_automation_spark.streaming.pipeline import (
+        snapshot_partitioned_state_commit_batch,
+        snapshot_state_commit_batch,
+    )
+
+    def merge(prev, batch):
+        ups = batch.select("k", "v")
+        if prev is None:
+            return ups
+        return prev.join(
+            batch.select("k").distinct(), "k", "left_anti"
+        ).unionByName(ups)
+
+    batch = spark.createDataFrame([(4, 40)], "k long, v long")
+
+    # single-bucket state: v1 holds keys 1..3, its DV deletes key 2
+    single = str(tmp_path / "single")
+    os.makedirs(single)
+    d1 = os.path.join(single, "state-v1")
+    spark.createDataFrame(
+        [(1, 10), (2, 20), (3, 30)], "k long, v long"
+    ).write.parquet(d1)
+    try_commit(single, 0, {"state": d1}, sidecars={
+        "deletes": {"column": "k", "buckets": {"state": [2]}},
+    })
+    snapshot_state_commit_batch(single, merge, writer_id="w")(batch, 0)
+    got = sorted(r.k for r in read_snapshot(spark, single).collect())
+    assert got == [1, 3, 4]
+
+    # bucketed state (bucket = k % 2): the touched bucket's DV applies
+    parted = str(tmp_path / "parted")
+    os.makedirs(parted)
+    buckets = {}
+    for b, rows in {0: [(2, 20), (6, 60)], 1: [(1, 10), (3, 30)]}.items():
+        d = os.path.join(parted, f"b{b}-g1")
+        spark.createDataFrame(rows, "k long, v long").write.parquet(d)
+        buckets[str(b)] = d
+    try_commit(parted, 0, buckets, sidecars={
+        "deletes": {"column": "k", "buckets": {"0": [2]}},
+    })
+    snapshot_partitioned_state_commit_batch(
+        parted, merge, lambda df: (F.col("k") % 2).cast("int"),
+        writer_id="w",
+    )(batch, 0)
+    got = sorted(r.k for r in read_snapshot(spark, parted).collect())
+    assert got == [1, 3, 4, 6]
 
 
 def test_table_history_reports_manifest_diffs(tmp_path):

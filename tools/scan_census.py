@@ -66,8 +66,7 @@ def main() -> None:
         worst = {t: k for t, k in counts.items() if k >= min_scans}
         if worst:
             rows.append((max(worst.values()), name, dict(counts)))
-    # label from the same predicate the cuts use (honors the deprecated
-    # SPARK_GRAFT_NO_CHECKPOINT alias too — r10 advisor).
+    # label from the same predicate the cuts use
     from financial_data_warehouse_automation_spark.lineage import plan_audit_mode
     mode = "audit" if plan_audit_mode() else "production"
     print(f"# {n_ok} plans built ({mode} mode); "
