@@ -49,8 +49,28 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+# the pinned timing order (module docstring); must equal the registry's
+# headline flags
+BASKET = (
+    "upsert_keep_last",
+    "ytd_running_total",
+    "top3_orders_per_segment",
+    "doc_exact_dedup",
+    "doc_pack_chunks",
+    "doc_decontaminate_splits",
+    "ann_cosine_topk_brute",
+    "events_sessionization_30min",
+    "events_asof_last_order",
+    "ingest_warehouse_build",
+    "pricing_summary",
+    "monthly_segment_totals",
+    "region_revenue",
+    "doc_minhash_lsh_pairs",
+)
+
 
 def main() -> None:
+    from financial_data_warehouse_automation_spark.measure import probes
     from financial_data_warehouse_automation_spark.registry import REGISTRY, load_all
     from financial_data_warehouse_automation_spark.session import (
         codegen_stats,
@@ -81,28 +101,13 @@ def main() -> None:
     spark = get_spark("bench")
 
     load_all()  # populate REGISTRY via import side effects
-    basket = (
-        "upsert_keep_last",
-        "ytd_running_total",
-        "top3_orders_per_segment",
-        "doc_exact_dedup",
-        "doc_pack_chunks",
-        "doc_decontaminate_splits",
-        "ann_cosine_topk_brute",
-        "events_sessionization_30min",
-        "events_asof_last_order",
-        "ingest_warehouse_build",
-        "pricing_summary",
-        "monthly_segment_totals",
-        "region_revenue",
-        "doc_minhash_lsh_pairs",
-    )
     headline = {n for n, s in REGISTRY.items() if s.headline}
-    assert headline == set(basket), (
-        f"headline flags drifted from the pinned basket: "
-        f"only-flagged={headline - set(basket)} only-pinned={set(basket) - headline}"
-    )
-    specs = {n: REGISTRY[n] for n in basket}
+    if headline != set(BASKET):
+        raise RuntimeError(
+            f"headline flags drifted from the pinned basket: "
+            f"only-flagged={headline - set(BASKET)} only-pinned={set(BASKET) - headline}"
+        )
+    specs = {n: REGISTRY[n] for n in BASKET}
     cg0 = codegen_stats(spark)
     for spec in specs.values():  # untimed sweep: C2-warm JVM for all
         spec.builder(spark, d).collect()
@@ -116,14 +121,9 @@ def main() -> None:
     # workload (pure-JVM whole-stage-codegen range sum — no I/O, no
     # shuffle, no Python), measured against the same warm JVM moments
     # before the basket. value / calib_spark_sec is comparable across
-    # rounds in a way raw seconds are not.
-    calib = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(3_000_000_000).selectExpr(
-            "bit_xor(xxhash64(id))"  # xor: no ANSI overflow
-        ).collect()
-        calib = min(calib, time.perf_counter() - t0)
+    # rounds in a way raw seconds are not. The second probe (below)
+    # times a fixed scan-path workload; both live in measure.probes.
+    calib, calib_scan = probes(spark, d)
 
     # Round 11 makes the calibration LOAD-BEARING (r10 verdict task 2:
     # "calib_spark_sec is emitted but nothing consumes it"). The pinned
@@ -155,13 +155,6 @@ def main() -> None:
     # different stories (the documented CPU-probe blind spot: read the
     # per-probe fields before trusting the composite).
     CALIB_SCAN_REF = 0.0845
-    calib_scan = float("inf")
-    li_price = spark.read.parquet(os.path.join(d, "lineitem.parquet")) \
-        .select("l_extendedprice")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        li_price.agg({"l_extendedprice": "sum"}).collect()
-        calib_scan = min(calib_scan, time.perf_counter() - t0)
     timings: dict[str, float] = {}
     timed_classes: dict[str, int] = {}
     timed_ms = 0.0

@@ -126,13 +126,9 @@ def _stream_state_partitions(spark, sf_dir: str, table: str = "events") -> int:
     6.3–8.1 s vs 2.4–2.9 s at 4 (same 183 rows) — state-store
     checkpoint I/O, not compute. The BYTES-DERIVED count is the
     scale-adaptive form: a 100 TB feed saturates the cluster cap, a
-    10 MB demo stream gets 2. Env override
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` pins it for experiments."""
+    10 MB demo stream gets 2."""
     import os as _os
 
-    env = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return int(env)
     path = f"{sf_dir}/{table}.parquet"
     try:
         if _os.path.isdir(path):

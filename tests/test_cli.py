@@ -16,3 +16,9 @@ def test_cli_unknown_query(capsys):
     from financial_data_warehouse_automation_spark.cli import main
 
     assert main(["explain", "no_such_query"]) == 2
+
+
+def test_cli_profile_unknown_query(capsys):
+    from financial_data_warehouse_automation_spark.cli import main
+
+    assert main(["profile", "pricing_summary", "no_such_query"]) == 2

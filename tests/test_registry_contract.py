@@ -98,3 +98,10 @@ def test_spark_entry_exports(fn_name):
     if fn_name != "entry":
         d = getattr(mod, fn_name)()
         assert isinstance(d, dict) and len(d) > 0
+
+
+def test_headline_flags_match_bench_basket():
+    import bench
+
+    headline = {n for n, s in load_all().items() if s.headline}
+    assert headline == set(bench.BASKET)

@@ -29,8 +29,8 @@ Two modes, selected by what you pass:
       A and B are the calib_spark_sec readings taken alongside the
       first and second sweep (bench.py's fixed-workload denominator;
       for a round's driver bench use BENCH_r{N}.json's field, for an
-      ad-hoc sweep run the calibration snippet from bench.py in the
-      same window). Every second-sweep time is scaled by A/B before
+      ad-hoc sweep the probe line of `cli profile` run in the same
+      window). Every second-sweep time is scaled by A/B before
       comparison, so a uniform box-speed change between the two
       windows cancels and the flags show code, not weather. The r10
       adjudication (~50-200ms/job drift, consumed judge+builder effort

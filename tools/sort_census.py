@@ -17,7 +17,6 @@ judges.
 
 from __future__ import annotations
 
-import io
 import os
 import re
 import sys
@@ -41,6 +40,7 @@ def main() -> None:
         del argv[i:i + 2]
     os.environ["SPARK_GRAFT_SF_DIR"] = sf
 
+    from financial_data_warehouse_automation_spark.measure import formatted_plan
     from financial_data_warehouse_automation_spark.registry import (
         REGISTRY,
         load_all,
@@ -53,15 +53,7 @@ def main() -> None:
     flagged, clean, errs = [], 0, []
     for n in names:
         try:
-            df = REGISTRY[n].builder(spark, sf)
-            out = io.StringIO()
-            old = sys.stdout
-            sys.stdout = out
-            try:
-                df.explain("formatted")
-            finally:
-                sys.stdout = old
-            plan = out.getvalue()
+            plan = formatted_plan(REGISTRY[n].builder(spark, sf))
         except Exception as exc:  # noqa: BLE001 - census must not abort
             errs.append((n, repr(exc)[:120]))
             continue
