@@ -2,9 +2,12 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line the driver parses into BENCH_r{N}.json.
 
-Timing methodology: each query is built lazily and forced with a
-count-shaped action (``df.foreach(noop)`` would skip the final project;
-``collect()`` is fine — headline results are small aggregates). One
+Timing methodology: each query is built lazily and forced with
+``collect()``, so a query's time includes shipping its result to the
+driver as Python ``Row``s. Most headline results are small aggregates,
+but three are not: ``upsert_keep_last`` returns 140,737 rows,
+``events_sessionization_30min`` 95,465 and ``events_asof_last_order``
+20,084 at sf0.1 (ROADMAP item 1). One
 warm-up pass primes parquet footers / JVM JIT; the reported time is the
 best of ``BENCH_REPS`` timed passes (min, not mean — GC noise only adds).
 

@@ -767,12 +767,16 @@ def ingest_monthly_snapshot_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-job latency — overlap them from two driver threads (the
         # compaction-pool precedent); the COMMIT stays one atomic
         # manifest publishing both, and months remain sequential (each
-        # merge reads the previous committed snapshot).
+        # merge reads the previous committed snapshot). Each thread
+        # runs under the caller's job group.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        in_group = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fw = pool.submit(wh.write.parquet, wh_d)
-            fl = pool.submit(ledger.write.parquet, led_d)
+            fw = pool.submit(in_group(wh.write.parquet), wh_d)
+            fl = pool.submit(in_group(ledger.write.parquet), led_d)
             fw.result(), fl.result()
         # ONE commit publishes the month's warehouse + ledger together
         assert try_commit(
@@ -986,12 +990,16 @@ def ingest_monthly_mor_restatement(
     # r16 (guide §2.6/§5): the two monthly stage writes are
     # independent jobs over tiny frames dominated by fixed per-job
     # latency — overlap them from two driver threads; the COMMITS
-    # stay strictly sequential (v2 appends to committed v1).
+    # stay strictly sequential (v2 appends to committed v1). Each
+    # thread runs under the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    in_group = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f01 = pool.submit(stage, facts(drop, 1), "m01")
-        f02 = pool.submit(stage, facts(drop, 2), "m02")
+        f01 = pool.submit(in_group(stage), facts(drop, 1), "m01")
+        f02 = pool.submit(in_group(stage), facts(drop, 2), "m02")
         m01, m02 = f01.result(), f02.result()
     assert try_commit(
         table, 0, {"m01": m01}, meta={"_committed_at": 1000.0},
@@ -1018,8 +1026,8 @@ def ingest_monthly_mor_restatement(
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_r = pool.submit(_diff_and_stage_restatement)
-        f_03 = pool.submit(stage, facts(p3, 3), "m03")
+        f_r = pool.submit(in_group(_diff_and_stage_restatement))
+        f_03 = pool.submit(in_group(stage), facts(p3, 3), "m03")
         (changed_keys, m02r), m03 = f_r.result(), f_03.result()
     assert try_commit(
         table, 2, {"m01": m01, "m02": m02, "m02r": m02r, "m03": m03},

@@ -420,8 +420,13 @@ def orders_compaction_snapshot_commit(
     # them from a small driver pool back-fills the tail of one job
     # with the next (guide §2.6) — the fragmentation construction
     # itself (exactly n_frag files per bucket via per-bucket
-    # repartition) is the demo's subject and stays per-bucket.
+    # repartition) is the demo's subject and stays per-bucket. Each
+    # thread runs under the caller's job group.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    in_group = inheritable_thread_target(spark)
 
     def frag_write(b: int) -> tuple[str, str]:
         d = os.path.join(table, f"b{b}-frag")
@@ -432,7 +437,7 @@ def orders_compaction_snapshot_commit(
         return str(b), d
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        v1_map = dict(pool.map(frag_write, range(n_buckets)))
+        v1_map = dict(pool.map(in_group(frag_write), range(n_buckets)))
     assert try_commit(table, 0, v1_map) == 1
 
     def agg(version: int, tag: str) -> DataFrame:
@@ -461,7 +466,7 @@ def orders_compaction_snapshot_commit(
         return str(b), dst, n_src, n_dst
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        compacted = list(pool.map(compact_one, range(n_buckets)))
+        compacted = list(pool.map(in_group(compact_one), range(n_buckets)))
     v2_map = {b: dst for b, dst, _, _ in compacted}
     frag_total = sum(n for _, _, n, _ in compacted)
     comp_total = sum(n for _, _, _, n in compacted)
@@ -3116,6 +3121,7 @@ def orders_commit_check_constraints(
         check_constraints,
         expire_snapshots,
         latest_version,
+        manifest_path,
         read_snapshot,
         try_commit,
     )
@@ -3153,7 +3159,7 @@ def orders_commit_check_constraints(
     except CommitCheckViolation as e:
         assert "positive_price" in str(e) and "key_present" in str(e)
     assert latest_version(table) == 1  # nothing published
-    assert not os.path.exists(os.path.join(table, "manifest-v2.json"))
+    assert not os.path.exists(manifest_path(table, 2))
 
     # the clean batch passes the same gate and commits
     d2 = os.path.join(table, "late98")

@@ -1715,12 +1715,16 @@ def _neardup_dropset_incremental(d: DataFrame) -> DataFrame:
     # (the relational.py compaction-pool precedent) instead of paying
     # the two ladders' job chains back to back. CC is pure DataFrame
     # algebra over `verified` (no session-conf mutation), so the
-    # threads share the session safely.
+    # threads share the session safely; each thread runs under the
+    # caller's job group.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    components = inheritable_thread_target(d.sparkSession)(_components)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_base = pool.submit(_components, base_pairs)
-        f_all = pool.submit(_components, all_pairs)
+        f_base = pool.submit(components, base_pairs)
+        f_all = pool.submit(components, all_pairs)
         base_comp, comp = f_base.result(), f_all.result()
     base_dropped = (
         base_comp
@@ -3099,16 +3103,16 @@ def doc_takedown_deletion_vector(
         read_snapshot,
         try_commit,
     )
-    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
+    from financial_data_warehouse_automation_spark.queries._helpers import (
+        range_bucket,
+        scratch_dir,
+    )
 
     n_buckets = 4
     table = scratch_dir("doctake_")
     d = load_table(spark, sf_dir, "documents")
     mx = d.agg(F.max("doc_id").alias("m")).collect()[0].m
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("doc_id") * n_buckets / (mx + 1)),
-    ).cast("int")
+    fb = range_bucket("doc_id", n_buckets, mx)
 
     root = os.path.join(table, "g1")
     d.withColumn("pb", fb).write.partitionBy("pb").parquet(root)
@@ -3233,6 +3237,7 @@ def doc_takedown_feed_propagation(
     )
     from financial_data_warehouse_automation_spark.queries._helpers import (
         assert_multiset_equal,
+        range_bucket,
         scratch_dir,
     )
     from financial_data_warehouse_automation_spark.sources.cdfsource import (
@@ -3252,10 +3257,7 @@ def doc_takedown_feed_propagation(
         "doc_id", "text", "lang", "n_chars"
     )
     mx = d.agg(F.max("doc_id").alias("m")).collect()[0].m
-    fb = F.least(
-        F.lit(n_buckets - 1),
-        F.floor(F.col("doc_id") * n_buckets / (mx + 1)),
-    ).cast("int")
+    fb = range_bucket("doc_id", n_buckets, mx)
 
     root = os.path.join(a_t, "g1")
     d.withColumn("pb", fb).write.partitionBy("pb").parquet(root)

@@ -1,83 +1,69 @@
 """Change-data-feed STREAMING source over the snapshot store: a Spark
 4 Python ``DataSourceStreamReader`` whose offsets ARE snapshot
 versions — Delta's ``readChangeFeed`` / Iceberg's incremental scan as
-a custom source (r12 verdict task 3: make the batch CDF of
-``orders_snapshot_changes`` a subscription).
+a custom source. The store's metadata (latest version, manifests,
+sidecars) is read through ``operators/snapshots``; this module adds
+only the per-bucket diff.
+
+Options: ``path`` (the table directory, required), ``keycol`` (the
+logical key column, default ``key``), ``startversion`` (default 1)
+and ``branch`` (default ``main``).
 
 Contract:
 
-* ``initialOffset`` = ``{"version": startversion}`` (default 1: the
-  base snapshot is history, not change rows — Delta's
-  ``startingVersion`` semantics).
-* ``latestOffset`` = the table's highest published manifest version;
-  a micro-batch covers every commit between the checkpointed offset
-  and head, and a consumer that keeps the stream running sees each
-  new commit as it publishes (the subscription).
+* ``initialOffset`` = ``{"version": startversion}``. The default 1
+  treats the base snapshot as history, not change rows (Delta's
+  ``startingVersion``); ``startversion=0`` bootstraps the whole table
+  as inserts, so a consumer can build a replica from the feed alone.
+* ``latestOffset`` = the branch's highest published manifest version;
+  a consumer that keeps the stream running sees each new commit as it
+  publishes (the subscription).
 * ``partitions(start, end)`` — planned DRIVER-SIDE from metadata
   only: for each version step (v-1, v] in the range, diff the two
-  manifests (KB-scale JSON) and emit ONE InputPartition per CHANGED
-  bucket. Cost of planning is O(buckets) per commit; unchanged
-  buckets never appear in the plan, so the feed costs its churn,
-  never the table.
-* ``read(partition)`` — runs ON EXECUTORS: reads the one bucket's
-  pre- and post-image directories (pyarrow), diffs them by key, and
-  emits typed rows ``(commit_version, change_type, <row columns>)`` —
-  ``insert`` / ``delete`` / ``update_preimage`` / ``update_postimage``.
-  Correct because the store's buckets partition the KEY SPACE: a row
-  never migrates buckets across a COW commit, so each bucket's diff
-  is complete and local — the diff of a 100 TB table distributes as
-  one task per changed bucket with zero shuffle.
-* FULL-ROW feeds (r14 — the r13 verdict's task 3): by default the
-  feed carries EVERY column of the table (Delta's ``readChangeFeed``
-  row shape); pre-image rows carry the pre-image values of every
-  column. Passing ``valcol`` selects the legacy single-value mode
-  (schema ``key bigint, value double``), which the r13 consumers use.
-* SCHEMA-EVOLUTION AWARE (r15 — the r14 verdict's task 3): a table
-  carrying a ``schema`` sidecar (column mapping) feeds under its
-  LOGICAL column names as of the subscription head: the feed's
-  columns are the head's logical fields, each bound to its stable
-  physical field id, so a RENAME mid-subscription is invisible (the
-  field id never changes — Iceberg field-id semantics) and an ADD
-  COLUMN feeds NULL for rows replayed from buckets that predate the
-  field. Executors intersect each bucket file's footer with the
-  requested physical fields, so pre-evolution buckets replay
-  correctly instead of failing mid-read (the r14 advisor's
-  unenforced-limitation finding). A physical field present in no
-  bucket, or a bucket file lacking the KEY field, raises a clear
-  plan-time / read-time error naming the field.
-* BRANCH AWARE (r15): ``.option("branch", name)`` subscribes to a
-  named branch's own version chain — offsets resolve that branch's
-  manifests and branch-qualified sidecars, exactly like
-  ``as_of_version(branch=)`` on the snapshot reader.
-* RETENTION vs CHECKPOINT (r13 advisor): planning a range whose
-  manifests ``expire_snapshots`` has already reclaimed raises a clear
-  error naming the interaction — the replay guarantee holds only
-  while retention keeps every manifest at or above the checkpointed
-  offset (Delta's readChangeFeed fails the same way when history is
-  vacuumed).
-* DELETION-VECTOR AWARE (r14): each version step also diffs the two
-  versions' ``deletes`` sidecars. A bucket whose directory is
-  unchanged but whose DV gained keys emits those keys as ``delete``
-  rows (pre-image values read from the shared directory); a bucket
-  whose DV lost keys (an un-delete, or a compaction that folded the
-  vector while rewriting) emits nothing spurious because BOTH images
-  are materialized dv-filtered before diffing — the feed always
-  reflects the LOGICAL table a snapshot reader sees, exactly Delta's
-  CDF over deletion vectors. A merge-on-read UPDATE (one commit: DV
-  on the old keys + a post-image bucket) therefore arrives as
-  delete-from-the-old-bucket + insert-from-the-new-bucket pairs; a
-  key-terminal fold must rank insert over delete within one commit
-  (see orders_mor_update).
-* Replays are deterministic: the same (start, end) range plans the
-  same partitions over the same immutable directories, so a restarted
-  query re-reading a committed range reproduces it byte-for-byte, and
-  a checkpoint at head re-plans nothing (no-op) — pinned by the
-  registered query's second run.
+  manifests and the two ``deletes`` sidecars and emit ONE
+  InputPartition per bucket whose directory or deletion vector
+  changed. Unchanged buckets never appear in the plan, so the feed
+  costs its churn, never the table.
+* ``read(partition)`` — runs ON EXECUTORS: loads the bucket's pre-
+  and post-image as Arrow tables, joins them on the key and yields
+  Arrow batches of ``(commit_version, change_type, <every column>)``
+  with change types ``insert`` / ``delete`` / ``update_preimage`` /
+  ``update_postimage``. Correct because the store's buckets partition
+  the KEY SPACE: a row never migrates buckets across a COW commit, so
+  each bucket's diff is complete and local — one task per changed
+  bucket, zero shuffle.
 
-The module is deliberately self-contained (stdlib + pyarrow, no
-package imports): Spark runs stream-reader planning in a separate
-Python worker process, and executors only ever see the pickled
-partition values.
+Row shape. The feed carries every column of the table at the
+subscription head (Delta's ``readChangeFeed`` row shape); pre-image
+rows carry the pre-image values. A table with a ``schema`` sidecar
+(column mapping) feeds under its LOGICAL names, each bound to its
+stable physical field: a RENAME mid-subscription is invisible and an
+ADD COLUMN feeds NULL for rows replayed from buckets that predate the
+field. Column types are the parquet footer's; timestamps are fed at
+microsecond precision, since Spark writes them as INT96, which
+pyarrow reads as nanoseconds and Spark's Arrow reader refuses.
+
+Deletion vectors. Both images are the LOGICAL bucket a snapshot
+reader sees (vector applied, last row per key kept), so a DV-only
+commit feeds deletes and a compaction that folds the vector feeds
+nothing. A merge-on-read UPDATE (DV on the old keys + a post-image
+bucket, one commit) arrives as delete-from-the-old-bucket +
+insert-from-the-new-bucket pairs; a key-terminal fold must rank
+insert over delete within one commit (see orders_mor_update).
+
+Errors (``ValueError``): a key column the table lacks; a column no
+bucket materializes; a deletion vector on a column other than the
+key; a bucket file lacking the key field or holding a NULL key (rows
+without a key cannot be diffed by key); and a range whose manifests
+``expire_snapshots`` has reclaimed — the replay guarantee holds only
+while retention keeps every manifest at or above the checkpointed
+offset (Delta's readChangeFeed fails the same way when history is
+vacuumed).
+
+Replays are deterministic: the same (start, end) range plans the same
+partitions over the same immutable directories, so a restarted query
+re-reading a committed range reproduces it, and a checkpoint at head
+re-plans nothing.
 
 Reference analogy: the reference's monthly re-pull re-reads EVERY
 spreadsheet to find what changed (build_warehouse.py:159-169 replays
@@ -88,9 +74,7 @@ rows a commit changed, which is what makes incremental MV maintenance
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -98,34 +82,23 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_MANIFEST_RE = re.compile(r"manifest(?:-([A-Za-z0-9_]+))?-v(\d+)\.json$")
-
-
-def _infix(branch: str) -> str:
-    return "" if branch == "main" else f"-{branch}"
-
-
-def _latest_version(table_dir: str, branch: str = "main") -> int:
-    best = 0
-    for name in os.listdir(table_dir):
-        m = _MANIFEST_RE.fullmatch(name)
-        if m and (m.group(1) or "main") == branch:
-            best = max(best, int(m.group(2)))
-    return best
+from financial_data_warehouse_automation_spark.operators.snapshots import (
+    latest_version,
+    manifest_path,
+    read_manifest,
+    read_sidecar,
+)
 
 
 def _buckets(
     table_dir: str, version: int, branch: str = "main"
 ) -> dict[str, str]:
-    path = os.path.join(
-        table_dir, f"manifest{_infix(branch)}-v{version}.json"
-    )
     try:
-        with open(path) as f:
-            record = json.load(f)
+        return read_manifest(table_dir, version, branch)
     except FileNotFoundError:
+        name = os.path.basename(manifest_path(table_dir, version, branch))
         raise ValueError(
-            f"CDF planning needs {os.path.basename(path)} of "
+            f"CDF planning needs {name} of "
             f"{table_dir} but retention (expire_snapshots) has "
             "reclaimed it. The byte-for-byte replay guarantee holds "
             "only while the table's retention horizon stays at or "
@@ -135,74 +108,35 @@ def _buckets(
             "readChangeFeed fails the same way when history is "
             "vacuumed)."
         ) from None
-    return {k: v for k, v in record.items() if not k.startswith("_")}
 
 
-_DDL_BY_ARROW = {
-    "int64": "bigint", "int32": "int", "int16": "smallint",
-    "int8": "tinyint", "double": "double", "float": "float",
-    "string": "string", "large_string": "string", "bool": "boolean",
-    "date32[day]": "date", "binary": "binary",
-}
-
-
-def _arrow_ddl(field) -> str:
-    """Spark DDL type for a pyarrow field (the handful the testdata
-    uses; anything exotic fails loudly rather than miscasting)."""
-    s = str(field.type)
-    if s in _DDL_BY_ARROW:
-        return _DDL_BY_ARROW[s]
-    if s.startswith("decimal128(") or s.startswith("decimal("):
-        return "decimal" + s[s.index("("):]
-    if s.startswith("timestamp"):
-        return "timestamp"
-    raise ValueError(
-        f"unsupported parquet type {s!r} for CDF column {field.name!r}"
-    )
-
-
-def _pa_type(s: str):
-    """pyarrow type for a footer type string — the types the Arrow
-    fast path of ``read()`` supports. Timestamps are deliberately
-    EXCLUDED (tz/unit semantics are handled by the row path's Python
-    datetime conversion; a mismatch here would silently shift values),
-    so timestamp-bearing tables take the legacy row path. Raises
-    ValueError for anything unsupported — the caller falls back."""
+def _feed_type(field):
+    """The Arrow type a footer field is fed at: its own, except that
+    timestamps are fed at microseconds (the unit Spark accepts)."""
     import pyarrow as pa
 
-    m = {
-        "int64": pa.int64(), "int32": pa.int32(),
-        "int16": pa.int16(), "int8": pa.int8(),
-        "double": pa.float64(), "float": pa.float32(),
-        "string": pa.string(), "large_string": pa.string(),
-        "bool": pa.bool_(), "date32[day]": pa.date32(),
-        "binary": pa.binary(),
-    }
-    if s in m:
-        return m[s]
-    dm = re.fullmatch(r"decimal(?:128)?\((\d+),\s*(-?\d+)\)", s)
-    if dm:
-        return pa.decimal128(int(dm.group(1)), int(dm.group(2)))
-    raise ValueError(f"no Arrow fast-path type for {s!r}")
+    if pa.types.is_timestamp(field.type):
+        return pa.timestamp("us", field.type.tz)
+    return field.type
 
 
-def _load_arrow(partition, types, d: str | None, dv):
+def _load_arrow(partition, d: str | None, dv):
     """One bucket directory -> Arrow table with columns ``c0..cN-1``
-    (feed-schema order, cast to the head's footer types, typed NULL
-    for fields a pre-evolution file lacks), ``__k`` (join-key copy)
-    and a presence marker — the version's delete vector applied as a
-    single vectorized ``is_in`` filter and keep-last-per-key dedup
-    applied only when duplicate keys actually exist (grouped
-    ``max(row_index)`` over the (sorted file, row) order — the same
-    survivor the r14 dict loop kept). Both images are the LOGICAL
-    bucket a snapshot reader sees. A file lacking the KEY field fails
-    loudly: it cannot be keyed."""
+    (feed-schema order, cast to the partition's types, typed NULL for
+    fields a pre-evolution file lacks), ``__k`` (join-key copy) and a
+    presence marker — the version's delete vector applied as a single
+    vectorized ``is_in`` filter and keep-last-per-key dedup applied
+    only when duplicate keys actually exist (grouped
+    ``max(row_index)`` over the (sorted file, row) order). A file
+    lacking the KEY field, or holding a NULL key, fails loudly: it
+    cannot be keyed."""
     if d is None:
         return None
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    types = partition.types
     key_idx = partition.phys.index(partition.key_phys)
     names = [f"c{i}" for i in range(len(partition.phys))]
     tabs = []
@@ -219,6 +153,12 @@ def _load_arrow(partition, types, d: str | None, dv):
             )
         want = [p for p in partition.phys if p in avail]
         t = pq.read_table(full, columns=want)
+        if t.column(partition.key_phys).null_count:
+            raise ValueError(
+                f"bucket file {full} holds a NULL in the feed's key "
+                f"field {partition.key_phys!r}: rows without a key "
+                "cannot be diffed by key"
+            )
         arrs = []
         for i, p in enumerate(partition.phys):
             if p in avail:
@@ -257,26 +197,24 @@ def _load_arrow(partition, types, d: str | None, dv):
     return t
 
 
-def _resolve_columns(
-    table_dir: str, branch: str = "main"
-) -> list[tuple[str, str, str, str]]:
-    """(logical_name, physical_field, spark_ddl_type, arrow_type) for
-    every column of the table AT THE SUBSCRIPTION HEAD — driver-side
-    metadata reads at source construction. ``arrow_type`` is the
-    footer's pyarrow type string; executors use it to build typed
-    Arrow output batches (and typed NULL columns for pre-evolution
-    files) without re-deriving types per file.
+def _resolve_columns(table_dir: str | None, branch: str = "main") -> list:
+    """(logical_name, physical_field, pyarrow_type) for every column of
+    the table AT THE SUBSCRIPTION HEAD — driver-side metadata reads.
+    The type is the footer's, as :func:`_feed_type` feeds it; executors
+    use it to build typed Arrow batches (and typed NULL columns for
+    pre-evolution files) without re-deriving types per file.
 
     A table with a ``schema`` sidecar (column mapping) feeds under its
     logical names: each logical name is bound to its stable physical
     field, and the type comes from the footer of the first bucket
     whose signature materializes that field (an added column's type is
     defined by the bucket that introduced it). Without a sidecar the
-    physical footer of the head's first bucket IS the schema, exactly
-    the r14 behavior."""
+    physical footer of the head's first bucket IS the schema."""
     import pyarrow.parquet as pq
 
-    head = _latest_version(table_dir, branch)
+    if not table_dir:
+        raise ValueError("snapshot_cdf requires a 'path' option")
+    head = latest_version(table_dir, branch)
     if head == 0:
         raise ValueError(
             f"no manifest on branch {branch!r} in {table_dir}"
@@ -292,62 +230,28 @@ def _resolve_columns(
             schemas[d] = pq.read_schema(os.path.join(d, files[0]))
         return schemas[d]
 
-    side = _sidecar(table_dir, head, "schema", branch)
+    side = read_sidecar(table_dir, head, "schema", branch)
     if side is None:
-        first = buckets[sorted(buckets)[0]]
-        sch = bucket_schema(first)
-        return [
-            (f.name, f.name, _arrow_ddl(f), str(f.type)) for f in sch
-        ]
+        sch = bucket_schema(buckets[sorted(buckets)[0]])
+        return [(f.name, f.name, _feed_type(f)) for f in sch]
     sigs = side.get("buckets", {})
-    out: list[tuple[str, str, str, str]] = []
+    out = []
     for logical, phys in side["fields"].items():
-        ddl = None
+        ftype = None
         for b in sorted(buckets):
             if phys in (sigs.get(b) or []):
                 sch = bucket_schema(buckets[b])
                 if phys in sch.names:
-                    fld = sch.field(phys)
-                    ddl, atype = _arrow_ddl(fld), str(fld.type)
+                    ftype = _feed_type(sch.field(phys))
                     break
-        if ddl is None:
+        if ftype is None:
             raise ValueError(
                 f"column {logical!r} (physical field {phys!r}) is "
                 f"materialized by no bucket of {table_dir} at head "
                 f"v{head} on branch {branch!r}: cannot derive its type"
             )
-        out.append((logical, phys, ddl, atype))
+        out.append((logical, phys, ftype))
     return out
-
-
-def _sidecar(
-    table_dir: str, version: int, kind: str, branch: str = "main"
-) -> dict | None:
-    """Manifest-authoritative sidecar resolution (r15, mirroring
-    operators/snapshots.read_sidecar): a manifest carrying the
-    ``_sidecars`` name map serves exactly the token-named files its
-    commit published — a kind it does not list is authoritatively
-    absent; pre-r15 manifests fall back to the deterministic path."""
-    mpath = os.path.join(
-        table_dir, f"manifest{_infix(branch)}-v{version}.json"
-    )
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            rec = json.load(f)
-        names = rec.get("_sidecars")
-        if names is not None:
-            name = names.get(kind)
-            if name is None:
-                return None
-            with open(os.path.join(table_dir, name)) as f:
-                return json.load(f)
-    path = os.path.join(
-        table_dir, f"{kind}{_infix(branch)}-v{version}.json"
-    )
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
 
 
 def _dv_keys(
@@ -359,7 +263,7 @@ def _dv_keys(
     key-space diff and fails loudly."""
     if version < 1:
         return {}
-    dv = _sidecar(table_dir, version, "deletes", branch)
+    dv = read_sidecar(table_dir, version, "deletes", branch)
     if dv is None:
         return {}
     if dv["column"] != key_col:
@@ -373,58 +277,36 @@ def _dv_keys(
 
 class _BucketDiff(InputPartition):
     def __init__(self, version: int, pre_dir: str | None,
-                 post_dir: str | None, key_phys: str,
-                 phys: list[str], pre_dv=(), post_dv=(),
-                 arrow_types: tuple[str, ...] = ()):
+                 post_dir: str | None, reader, pre_dv, post_dv):
         self.version = version
         self.pre_dir = pre_dir
         self.post_dir = post_dir
-        self.key_phys = key_phys  # the key's PHYSICAL field
-        # physical field per output column, feed-schema order; a
-        # bucket file lacking a field feeds NULL for it (pre-ADD
-        # COLUMN replays), exactly the mapped snapshot read
-        self.phys = phys
+        self.key_phys = reader.key_phys  # the key's PHYSICAL field
+        # per output column, feed-schema order: the physical field (a
+        # bucket file lacking it feeds NULL — pre-ADD COLUMN replays),
+        # the pyarrow type (pyarrow types pickle) and the logical name
+        # Spark validates returned batches against
+        self.phys = reader.phys
+        self.types = reader.types
+        self.out_cols = reader.cols
         self.pre_dv = tuple(sorted(pre_dv))    # keys DV'd at v-1
         self.post_dv = tuple(sorted(post_dv))  # keys DV'd at v
-        # pyarrow type string per output column (from the head's
-        # footers) — lets read() build typed Arrow batches and typed
-        # NULL columns without guessing
-        self.arrow_types = tuple(arrow_types)
-        # output (logical) column names for Arrow batches — Spark
-        # validates returned batch names against the declared schema
-        self.out_cols: tuple[str, ...] = ()
 
 
 class SnapshotCDFStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.table_dir = options.get("path")
-        if not self.table_dir:
-            raise ValueError("snapshot_cdf requires a 'path' option")
         self.branch = options.get("branch", "main")
         self.key_col = options.get("keycol", "key")
         self.start_version = int(options.get("startversion", 1))
-        val_col = options.get("valcol")
-        if val_col is not None:
-            # legacy single-value mode: (key, value) rows, physical
-            # names (a valcol table carries no column mapping)
-            self.cols = [self.key_col, val_col]
-            self.phys = list(self.cols)
-            self.arrow_types = ("int64", "double")
-            # the DECLARED legacy schema names the columns key/value
-            self.out_cols = ("key", "value")
-        else:
-            # full-row mode: the head's logical columns, each bound
-            # to its stable physical field (r15: schema-evolution
-            # aware — see module docstring)
-            cols4 = _resolve_columns(self.table_dir, self.branch)
-            self.cols = [c for c, _, _, _ in cols4]
-            self.phys = [p for _, p, _, _ in cols4]
-            self.arrow_types = tuple(t for _, _, _, t in cols4)
-            self.out_cols = tuple(self.cols)
+        cols = _resolve_columns(self.table_dir, self.branch)
+        self.cols = tuple(c for c, _, _ in cols)
+        self.phys = tuple(p for _, p, _ in cols)
+        self.types = tuple(t for _, _, t in cols)
         if self.key_col not in self.cols:
             raise ValueError(
                 f"key column {self.key_col!r} not in table columns "
-                f"{self.cols}"
+                f"{list(self.cols)}"
             )
         self.key_phys = self.phys[self.cols.index(self.key_col)]
 
@@ -433,16 +315,15 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         return {"version": max(
-            _latest_version(self.table_dir, self.branch),
+            latest_version(self.table_dir, self.branch),
             self.start_version,
         )}
 
     def partitions(self, start: dict, end: dict):
         out = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            # startversion=0 bootstraps: the v0 -> v1 step has no pre
-            # image, so the whole base snapshot arrives as inserts — a
-            # consumer can build a replica from nothing but the feed
+            # the v0 -> v1 step has no pre-image: the base snapshot
+            # arrives as inserts
             pre = (
                 _buckets(self.table_dir, v - 1, self.branch)
                 if v > 1 else {}
@@ -458,69 +339,31 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
                 churn = pre.get(b) != post.get(b)  # manifest diff
                 dv_churn = pre_dv.get(b, set()) != post_dv.get(b, set())
                 if churn or dv_churn:  # data OR delete-vector change
-                    p = _BucketDiff(
-                        v, pre.get(b), post.get(b),
-                        self.key_phys, self.phys,
+                    out.append(_BucketDiff(
+                        v, pre.get(b), post.get(b), self,
                         pre_dv.get(b, set()), post_dv.get(b, set()),
-                        self.arrow_types,
-                    )
-                    p.out_cols = tuple(self.out_cols)
-                    out.append(p)
+                    ))
         return out
 
     def read(self, partition: _BucketDiff):
         """Diff one bucket's pre/post images and emit typed change
-        rows. VECTORIZED (r15, guide §4.2): the r14 implementation
-        pulled every column through ``to_pylist`` and diffed rows in a
-        Python dict loop — per-row interpreter work proportional to
-        the bucket, i.e. the one Python loop in the feed's hot path
-        (a full-table bootstrap pushed the whole table through it).
-        Now the images load as Arrow tables, the delete vector applies
-        as one ``is_in`` filter, keep-last-per-key dedup is a grouped
-        ``max(row_index)`` + ``take`` (only when duplicate keys exist),
-        the pre/post diff is ONE full-outer Arrow join with vectorized
-        NaN-safe column compares, and the result leaves as Arrow
-        RecordBatches — Spark 4's Python data sources accept them
-        directly, so no per-row pickling either. Rows are the same
-        multiset as the r14 loop (pinned by the oracle-checked CDF
-        band); only their order within a partition differs. NULL join
-        keys cannot use the join fast path and fall back to the exact
-        r14 row loop (``_read_rows``)."""
+        rows as Arrow RecordBatches: the images load as Arrow tables
+        (see :func:`_load_arrow`), the diff is ONE full-outer join on
+        the key with vectorized NaN-safe column compares, and no row
+        passes through the Python interpreter."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        try:
-            types = (
-                [_pa_type(t) for t in partition.arrow_types]
-                if partition.arrow_types else None
-            )
-        except ValueError:
-            types = None
-        if types is None:
-            # unshipped or exotic column types (e.g. timestamps, whose
-            # tz semantics the tuple path already handles): legacy path
-            yield from self._read_rows(partition)
-            return
-
         key_idx = partition.phys.index(partition.key_phys)
-        pre = _load_arrow(
-            partition, types, partition.pre_dir, partition.pre_dv
-        )
+        pre = _load_arrow(partition, partition.pre_dir, partition.pre_dv)
         post = _load_arrow(
-            partition, types, partition.post_dir, partition.post_dv
+            partition, partition.post_dir, partition.post_dv
         )
-        if (pre is not None and pre["__k"].null_count) or (
-            post is not None and post["__k"].null_count
-        ):
-            # NULL keys: Arrow join semantics (null != null) diverge
-            # from the dict diff; keep the exact legacy behavior
-            yield from self._read_rows(partition)
-            return
 
         ver = pa.scalar(partition.version, pa.int32())
         ncols = len(partition.phys)
         out_names = ["commit_version", "change_type"] + list(
-            partition.out_cols or partition.phys
+            partition.out_cols
         )
 
         def emit(kind: str, columns):
@@ -560,11 +403,10 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
         inserts = j.filter(pc.and_(inpost, pc.invert(inpre)))
         both = j.filter(pc.and_(inpre, inpost))
         differ = None
-        for i, ty in enumerate(types):
+        for i, ty in enumerate(partition.types):
             a, b = both[f"a{i}"], both[f"b{i}"]
             # NaN-safe, NULL-safe per-column "same": both null, both
             # NaN (floats), or equal — anything else is a change
-            # (exactly the tuple path's `changed()` per-cell logic)
             same = pc.and_(pc.is_null(a), pc.is_null(b))
             same = pc.or_(same, pc.fill_null(pc.equal(a, b), False))
             if pa.types.is_floating(ty):
@@ -594,103 +436,40 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
             if tbl.num_rows:
                 yield from emit(kind, side_cols(tbl, prefix))
 
-    def _read_rows(self, partition: _BucketDiff):
-        """The r14 row-at-a-time diff, kept verbatim as the fallback
-        for shapes the Arrow fast path refuses (NULL join keys,
-        unshipped/exotic column types)."""
-
-        def load(d: str | None, dv) -> dict:
-            """key -> tuple of ALL output column values (feed-schema
-            order), with the version's delete vector applied — both
-            images are the LOGICAL bucket a snapshot reader sees, so
-            a DV-only commit diffs as deletes and a compaction that
-            folds the vector diffs as nothing. Fields a file's footer
-            lacks read NULL (pre-evolution buckets — r15); a file
-            lacking the KEY field fails loudly: it cannot be keyed."""
-            if d is None:
-                return {}
-            import pyarrow.parquet as pq
-
-            dropped = set(dv)
-            kv: dict = {}
-            key_idx = partition.phys.index(partition.key_phys)
-            for name in sorted(os.listdir(d)):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(d, name)
-                avail = set(pq.read_schema(full).names)
-                if partition.key_phys not in avail:
-                    raise ValueError(
-                        f"bucket file {full} lacks the feed's key "
-                        f"field {partition.key_phys!r}: this bucket "
-                        "cannot be diffed by key"
-                    )
-                want = [p for p in partition.phys if p in avail]
-                t = pq.read_table(full, columns=want)
-                data = {p: t.column(p).to_pylist() for p in want}
-                none_col = [None] * t.num_rows
-                cols = [data.get(p, none_col) for p in partition.phys]
-                for row in zip(*cols):
-                    if row[key_idx] in dropped:
-                        continue
-                    kv[row[key_idx]] = row
-            return kv
-
-        def changed(a: tuple, b: tuple) -> bool:
-            # NaN-safe inequality per column: a NaN-valued row that
-            # did not change must not emit a spurious update pair
-            # (NaN != NaN is True under IEEE compare)
-            for x, y in zip(a, b):
-                if x != x and y != y:
-                    continue
-                if x != y:
-                    return True
-            return False
-
-        pre = load(partition.pre_dir, partition.pre_dv)
-        post = load(partition.post_dir, partition.post_dv)
-        for k in sorted(set(pre) | set(post)):
-            if k not in post:
-                yield (partition.version, "delete", *pre[k])
-            elif k not in pre:
-                yield (partition.version, "insert", *post[k])
-            elif changed(pre[k], post[k]):
-                yield (partition.version, "update_preimage", *pre[k])
-                yield (partition.version, "update_postimage", *post[k])
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets are durable table versions; nothing to ack
-
-    def stop(self) -> None:
-        pass
-
 
 class SnapshotCDFDataSource(DataSource):
     """``spark.readStream.format("snapshot_cdf").option("path", table)
     .option("keycol", ...).load()`` after
     ``spark.dataSource.register(SnapshotCDFDataSource)``.
 
-    Default schema is FULL-ROW: ``commit_version int, change_type
-    string`` followed by every table column at its parquet type —
-    LOGICAL names when the table carries a column mapping (r15).
-    ``.option("valcol", c)`` selects the legacy two-column feed
-    (``key bigint, value double``) the r13 consumers use;
-    ``.option("branch", b)`` subscribes to a named branch's chain."""
+    Schema: ``commit_version int, change_type string`` followed by
+    every table column at its parquet type — LOGICAL names when the
+    table carries a column mapping. ``.option("branch", b)``
+    subscribes to a named branch's chain."""
 
     @classmethod
     def name(cls) -> str:
         return "snapshot_cdf"
 
-    def schema(self) -> str:
-        head = "commit_version int, change_type string"
-        if self.options.get("valcol") is not None:
-            return f"{head}, key bigint, value double"
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("snapshot_cdf requires a 'path' option")
-        cols = _resolve_columns(path, self.options.get("branch", "main"))
-        body = ", ".join(f"{n} {t}" for n, _, t, _ in cols)
-        return f"{head}, {body}"
+    def schema(self):
+        from pyspark.sql.pandas.types import from_arrow_type
+        from pyspark.sql.types import (
+            IntegerType,
+            StringType,
+            StructField,
+            StructType,
+        )
+
+        cols = _resolve_columns(
+            self.options.get("path"), self.options.get("branch", "main")
+        )
+        return StructType(
+            [
+                StructField("commit_version", IntegerType()),
+                StructField("change_type", StringType()),
+            ]
+            + [StructField(n, from_arrow_type(t)) for n, _, t in cols]
+        )
 
     def streamReader(self, schema) -> SnapshotCDFStreamReader:
         return SnapshotCDFStreamReader(self.options)

@@ -50,3 +50,21 @@ def test_formatted_plan_returns_text_and_prints_nothing(spark, sf_dir, capsys):
     plan = measure.formatted_plan(df)
     assert plan.startswith("== Physical Plan ==")
     assert capsys.readouterr().out == ""
+
+
+def _job_ids(sc) -> set[int]:
+    """Every job the live status store holds."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def test_record_counts_jobs_started_on_pool_threads(spark, sf_dir):
+    """ingest_monthly_snapshot_loop writes from ThreadPoolExecutor
+    threads. Those threads keep the caller's job group, so record
+    counts every job the build started."""
+    spec = load_all()["ingest_monthly_snapshot_loop"]
+    before = _job_ids(spark.sparkContext)
+    rec = measure.record(spark, spec.name, lambda: spec.builder(spark, sf_dir))
+    new = _job_ids(spark.sparkContext) - before
+    assert rec["jobs"] == len(new) > 0

@@ -538,3 +538,51 @@ def test_no_snapshot_read_bypasses_read_snapshot():
                 if not any("# pre-commit read" in ln for ln in span):
                     bypasses.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not bypasses, bypasses
+
+
+def test_only_snapshots_module_names_store_files():
+    """The snapshot store's file names — ``manifest[-<branch>]-v<N>.json``
+    and the sidecars' ``<kind>[-<branch>]-v<N>[.<token>].json`` — and the
+    manifest's ``_sidecars`` name map belong to operators/snapshots.py.
+    Every other module goes through ``manifest_path``, ``read_manifest``
+    and ``read_sidecar``, so a second copy of the file format cannot
+    drift from the store. A literal, f-string or regex source that
+    spells such a name fails; docstrings may describe the names."""
+    import ast
+    import pathlib
+
+    import financial_data_warehouse_automation_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    # -v2.json, f"-v{version}.json", r"-v(\d+)\.json"
+    store_name = re.compile(r"-v(\d+|\{\}|\(\\d\+\)).*\.json")
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "operators/snapshots.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                                 ast.AsyncFunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.JoinedStr):
+                text = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in node.values
+                )
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if id(node) in docstrings:
+                    continue
+                text = node.value
+            else:
+                continue
+            if store_name.search(text) or text == "_sidecars":
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, sorted(set(offenders))

@@ -1741,3 +1741,163 @@ def test_sortorder_sidecar_carries_and_drops(tmp_path):
     d3 = _mkdata(table, "g3")
     try_commit(table, 2, {"0": d3, "1": d2})
     assert table_sort_order(table, 3) is None
+
+
+# --------------------------------------------------------------------
+# sources/cdfsource.py: the snapshot_cdf change feed
+# --------------------------------------------------------------------
+
+
+def _cdf_rows(spark, table, tmp_path, **options):
+    """Every change row the snapshot_cdf feed of ``table`` emits from
+    ``startversion`` to head, drained in one micro-batch."""
+    from financial_data_warehouse_automation_spark.sources.cdfsource import (
+        SnapshotCDFDataSource,
+    )
+
+    spark.dataSource.register(SnapshotCDFDataSource)
+    reader = spark.readStream.format("snapshot_cdf").option("path", table)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    out = str(tmp_path / "feed_out")
+    q = (
+        reader.load().writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "feed_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(out)
+
+
+def _diff(pre: dict, post: dict, version: int) -> set:
+    """Change rows of one commit from its key -> row images."""
+    out = set()
+    for k in set(pre) | set(post):
+        if k not in post:
+            out.add((version, "delete", *pre[k]))
+        elif k not in pre:
+            out.add((version, "insert", *post[k]))
+        elif pre[k] != post[k]:
+            out.add((version, "update_preimage", *pre[k]))
+            out.add((version, "update_postimage", *post[k]))
+    return out
+
+
+def test_cdf_feed_with_timestamps_equals_snapshot_diff(spark, tmp_path):
+    """A Spark-written timestamp column (INT96, read by pyarrow at
+    nanoseconds) feeds at its own values and type. The commit's
+    update, delete and insert rows — one bucket rewritten, another
+    DV'd — equal a diff of read_snapshot's pre- and post-image."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        read_snapshot,
+        try_commit,
+    )
+
+    table = str(tmp_path / "t")
+    cols = "k long, ts timestamp, v double"
+
+    def write(name, rows):
+        d = os.path.join(table, name)
+        spark.createDataFrame(rows, cols).write.parquet(d)
+        return d
+
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 31, 23, 59, 59, 123456)
+    base = [(k, t0 + dt.timedelta(days=k), k * 1.5) for k in range(10)]
+    b0, b1 = write("b0-g1", base[:5]), write("b1-g1", base[5:])
+    try_commit(table, 0, {"b0": b0, "b1": b1})
+    b0_g2 = write("b0-g2", [
+        base[0],
+        (1, t0 + dt.timedelta(hours=7), 1.5),  # update: ts only
+        base[3], base[4],                        # 2 deleted
+        (11, t0, 99.0),                          # insert
+    ])
+    try_commit(
+        table, 1, {"b0": b0_g2, "b1": b1},
+        sidecars={"deletes": {"column": "k", "buckets": {"b1": [7]}}},
+    )
+
+    feed = _cdf_rows(spark, table, tmp_path, keycol="k")
+    assert feed.columns == ["commit_version", "change_type", "k", "ts", "v"]
+    assert dict(feed.dtypes)["ts"] == "timestamp"
+    got = [tuple(r) for r in feed.collect()]
+
+    def image(version):
+        return {
+            r.k: tuple(r)
+            for r in read_snapshot(spark, table, version=version).collect()
+        }
+
+    want = _diff(image(1), image(2), 2)
+    assert len(got) == len(set(got)) == len(want) == 5
+    assert set(got) == want
+
+
+def test_cdf_startversion_zero_bootstraps_inserts(spark, tmp_path):
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        read_snapshot,
+        try_commit,
+    )
+
+    table = str(tmp_path / "t")
+    dirs = {}
+    for b in range(3):
+        dirs[str(b)] = os.path.join(table, f"b{b}")
+        spark.range(b * 10, b * 10 + 10).selectExpr(
+            "id AS k", "CAST(id AS STRING) AS s"
+        ).write.parquet(dirs[str(b)])
+    try_commit(table, 0, dirs)
+
+    got = sorted(
+        tuple(r) for r in _cdf_rows(
+            spark, table, tmp_path, keycol="k", startversion=0
+        ).collect()
+    )
+    want = sorted(
+        (1, "insert", r.k, r.s) for r in read_snapshot(spark, table).collect()
+    )
+    assert got == want and len(got) == 30
+
+
+def test_cdf_null_key_raises(spark, tmp_path):
+    """NULL-keyed rows cannot be diffed by key: reading the bucket
+    fails and names the file instead of collapsing those rows into
+    one change row."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        try_commit,
+    )
+    from financial_data_warehouse_automation_spark.sources.cdfsource import (
+        SnapshotCDFStreamReader,
+    )
+
+    table = str(tmp_path)
+    d = os.path.join(table, "b0")
+    spark.createDataFrame(
+        [(1, 10), (None, 20), (None, 30)], "k long, v long"
+    ).coalesce(1).write.parquet(d)
+    try_commit(table, 0, {"b0": d})
+
+    reader = SnapshotCDFStreamReader({"path": table, "keycol": "k"})
+    (part,) = reader.partitions({"version": 0}, {"version": 1})
+    with pytest.raises(ValueError, match=r"b0/part-.*NULL"):
+        list(reader.read(part))
+
+
+def test_cdf_expired_start_manifest_raises_retention_error(spark, tmp_path):
+    from financial_data_warehouse_automation_spark.sources.cdfsource import (
+        SnapshotCDFStreamReader,
+    )
+
+    table = str(tmp_path)
+    for v in range(3):
+        d = os.path.join(table, f"g{v}")
+        spark.range(v, v + 3).selectExpr("id AS k").write.parquet(d)
+        try_commit(table, v, {"b0": d})
+    expire_snapshots(table, keep_from=3)
+
+    reader = SnapshotCDFStreamReader({"path": table, "keycol": "k"})
+    with pytest.raises(ValueError, match=r"manifest-v1\.json .*retention"):
+        reader.partitions({"version": 1}, {"version": 3})
