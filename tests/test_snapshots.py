@@ -1795,6 +1795,8 @@ def test_cdf_feed_with_timestamps_equals_snapshot_diff(spark, tmp_path):
         try_commit,
     )
 
+    import datetime as dt
+
     table = str(tmp_path / "t")
     cols = "k long, ts timestamp, v double"
 
@@ -1802,8 +1804,6 @@ def test_cdf_feed_with_timestamps_equals_snapshot_diff(spark, tmp_path):
         d = os.path.join(table, name)
         spark.createDataFrame(rows, cols).write.parquet(d)
         return d
-
-    import datetime as dt
 
     t0 = dt.datetime(2024, 1, 31, 23, 59, 59, 123456)
     base = [(k, t0 + dt.timedelta(days=k), k * 1.5) for k in range(10)]
