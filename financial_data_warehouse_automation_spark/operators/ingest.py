@@ -20,14 +20,6 @@ def _sheet_window() -> Window:
     return Window.partitionBy(*_SHEET_PART)
 
 
-def _running(w=None):
-    return (
-        Window.partitionBy(*_SHEET_PART)
-        .orderBy("row_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-
-
 def discover_header_rows(
     df: DataFrame, col_a: str = "col_a", col_b: str = "col_b"
 ) -> DataFrame:
@@ -42,32 +34,6 @@ def discover_header_rows(
         df.withColumn("_hdr_idx", hdr_idx)
         .where(F.col("_hdr_idx").isNotNull() & (F.col("row_idx") > F.col("_hdr_idx")))
         .drop("_hdr_idx")
-    )
-
-
-def forward_fill_category(df: DataFrame, col_a: str = "col_a") -> DataFrame:
-    """W1/P4 (build_warehouse.py:91-94; Code.gs:185-191): REVENUES /
-    EXPENSES sentinel rows set the category for all following rows."""
-    sentinel = F.when(F.upper(F.trim(col_a)) == "REVENUES", "Revenue").when(
-        F.upper(F.trim(col_a)) == "EXPENSES", "Expenses"
-    )
-    return df.withColumn(
-        "category", F.last(sentinel, ignorenulls=True).over(_running())
-    )
-
-
-def balance_section_category(df: DataFrame, desc_col: str = "col_c") -> DataFrame:
-    """W3 (Code.gs:215-223): category starts Assets, flips to Liability
-    after TOTAL ASSETS and to Equity after TOTAL LIABILITIES. Sentinel
-    rows themselves are dropped later by the subtotal filter (P5), so an
-    inclusive running frame is safe."""
-    boundary = F.when(
-        F.upper(F.trim(desc_col)).isin("TOTAL ASSETS", "TOTAL LIABILITIES"), 1
-    ).otherwise(0)
-    cnt = F.sum(boundary).over(_running())
-    return df.withColumn(
-        "category",
-        F.when(cnt == 0, "Assets").when(cnt == 1, "Liability").otherwise("Equity"),
     )
 
 
@@ -121,8 +87,9 @@ def parse_income_statement(lines: DataFrame) -> DataFrame:
     drop → period/department stamping.
 
     Output grain: (gl_code, year, month, department, category) facts.
-    Emits the same expression trees as the W1/W2 + F1-F4 Column helpers
-    (discover_header_rows / forward_fill_category / scalars.py), via
+    The W1 category forward-fill is the running ``last(..., true)``
+    window below; W2 emits the same expression tree as
+    ``discover_header_rows`` and F1-F4 the same as scalars.py, via
     parsed SQL — see the construction-cost note above.
     """
     return (
@@ -158,9 +125,10 @@ def parse_income_statement(lines: DataFrame) -> DataFrame:
 def parse_balance_sheet(lines: DataFrame) -> DataFrame:
     """Balance-sheet parse (Code.gs:211-235): section state machine →
     subtotal/blank-description skip (P5, Code.gs:224) → GL/amount parse.
-    Department is the empty string (Code.gs:231). Same expression trees
-    as the W3 + F1/F2 Column helpers, via parsed SQL (see the
-    construction-cost note above)."""
+    Department is the empty string (Code.gs:231). The W3 state machine
+    is a running count of TOTAL ASSETS / TOTAL LIABILITIES rows; F1/F2
+    emit the same expression trees as scalars.py, via parsed SQL (see
+    the construction-cost note above)."""
     return (
         lines.selectExpr(
             "*",

@@ -323,6 +323,97 @@ def try_commit(
     return version
 
 
+def _ledger(table_dir: str, version: int) -> dict[str, int]:
+    if version == 0:
+        return {}
+    return dict(read_manifest_meta(table_dir, version).get("_txn", {}))
+
+
+def committed_through(table_dir: str, writer_id: str) -> int:
+    """Last batch id ``writer_id`` has committed to ``table_dir``, read
+    from the latest manifest's ``_txn`` ledger (-1 = none yet)."""
+    return _ledger(table_dir, latest_version(table_dir)).get(writer_id, -1)
+
+
+def stream_commit(table_dir: str, writer_id: str, batch_id: int, fold):
+    """Commit one micro-batch of an at-least-once stream exactly once.
+
+    Every stream sink over this store (streaming/pipeline.py) is a
+    ``fold`` driven by this one loop:
+
+    * **Ledger.** The latest manifest's metadata carries ``_txn =
+      {writer_id: last committed batch id}``, Delta's
+      txnAppId/txnVersion. Each writer has its own entry, so a new
+      stream with a fresh checkpoint (batch ids restarting at 0) appends
+      under its own id instead of being mistaken for a replay.
+    * **Replay.** If the ledger already holds ``batch_id`` for this
+      writer, the batch was committed: return ``None`` before any
+      staging. The same check runs before every commit attempt, so a
+      replay that won the race against this call also ends it.
+    * **Fold.** ``fold(version, manifest, suffix)`` stages the batch
+      against ``version`` (0 = empty table) and its bucket mapping. It
+      returns ``None`` when there is nothing to commit, else
+      ``(reads, rebase)``: ``reads`` are the bucket ids the fold read
+      (``None`` = the whole manifest, ``()`` = nothing) and
+      ``rebase(base) -> mapping`` puts the staged buckets on top of any
+      later mapping. ``suffix`` is ``""`` on the first fold and
+      ``-r<n>`` on the n-th re-fold; it goes into the staging directory
+      name, so a re-fold never overwrites a directory a committed
+      manifest may name. A first fold may overwrite its own directory:
+      only a crashed attempt of the same batch can have left it.
+    * **Read-set check and rebase.** Before every compare-and-swap the
+      latest mapping is compared with the fold's on ``reads``. If a
+      concurrent commit moved any of them, the staged result is stale
+      and the batch is folded again, so a rival's effect is never
+      overwritten. Otherwise ``rebase(latest mapping)`` is published as
+      latest + 1 with the bumped ledger; a lost race
+      (:class:`SnapshotConflict`) re-reads the latest and tries again.
+      Versions are thus decoupled from batch ids, and a rebase never
+      needs an expired manifest.
+
+    Readers see a consistent prefix of every writer's stream: a
+    writer's ledger value is the last batch whose rows are published,
+    and every bucket a manifest names is immutable. Maintenance commits
+    (compaction, rewrites) must carry ``_txn`` forward in their own
+    meta; a commit that drops it forgets which batches were applied
+    and lets a replay write twice.
+
+    Returns the committed version, or ``None`` if nothing was
+    committed."""
+    if committed_through(table_dir, writer_id) >= batch_id:
+        return None
+    attempt = 0
+    while True:
+        version = latest_version(table_dir)
+        manifest = read_manifest(table_dir, version) if version else {}
+        folded = fold(version, manifest, f"-r{attempt}" if attempt else "")
+        if folded is None:
+            return None
+        reads, rebase = folded
+
+        def view(m: dict) -> dict:
+            return m if reads is None else {b: m.get(b) for b in reads}
+
+        seen = view(manifest)
+        while True:
+            latest = latest_version(table_dir)
+            txn = _ledger(table_dir, latest)
+            if txn.get(writer_id, -1) >= batch_id:
+                return None
+            base = read_manifest(table_dir, latest) if latest else {}
+            if view(base) != seen:
+                break
+            txn[writer_id] = batch_id
+            try:
+                return try_commit(
+                    table_dir, latest, rebase(base),
+                    meta={"_writer": writer_id, "_txn": txn},
+                )
+            except SnapshotConflict:
+                continue
+        attempt += 1
+
+
 class CommitCheckViolation(Exception):
     """A CHECK constraint failed on the frame staged for a commit;
     nothing was published."""

@@ -165,18 +165,40 @@ def price_cdc(upd: Column, dele: Column | None = None, bump: float = 100.0):
     return fn
 
 
-def cow_rewrite(spark, table: str, base_map: dict, buckets, fn, gen: str):
-    """Copy-on-write ``buckets`` of ``base_map``: each bucket's
-    directory goes through ``fn(DataFrame) -> DataFrame`` into a fresh
-    ``table/b<b>-<gen>``. Returns a copy of ``base_map`` with those
+def cow_rewrite(spark, table: str, version: int, buckets, fn, gen: str):
+    """Copy-on-write ``buckets`` of ``table``'s committed ``version``:
+    each bucket, read through ``read_snapshot`` (so its deletion vector
+    applies), goes through ``fn(DataFrame) -> DataFrame`` into a fresh
+    ``table/b<b>-<gen>``. Returns the version's mapping with those
     buckets re-pointed; every other bucket keeps its directory string,
     shared verbatim with the base version."""
-    out = dict(base_map)
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        read_manifest,
+        read_snapshot,
+    )
+
+    out = read_manifest(table, version)
     for b in buckets:
         d = os.path.join(table, f"b{b}-{gen}")
-        fn(spark.read.parquet(base_map[str(b)])).write.parquet(d)
+        fn(
+            read_snapshot(spark, table, version=version, buckets=[b])
+        ).write.parquet(d)
         out[str(b)] = d
     return out
+
+
+def drain(query) -> None:
+    """Run a started stream until it has processed everything its
+    source holds now, then stop it. A ``snapshot_cdf`` subscription
+    starts with the default trigger and drains here: its Python reader
+    does not support ``availableNow``, for which Spark falls back to
+    one batch, so a restart whose checkpoint holds an uncommitted batch
+    would re-run only that batch and stop short of head."""
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+        query.awaitTermination()
 
 
 def scratch_dir(prefix: str) -> str:

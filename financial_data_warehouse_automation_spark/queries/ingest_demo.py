@@ -695,7 +695,7 @@ def ingest_monthly_snapshot_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         as_of_version,
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.operators.warehouse import (
@@ -725,14 +725,8 @@ def ingest_monthly_snapshot_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         for (y, m) in periods
     ] + [(3, parse_income_statement(spark_df(spark, "income_lines_p3")))]
 
-    def read_bucket(version: int, bucket: str, schema: str) -> DataFrame:
-        return spark.read.schema(schema).parquet(
-            read_manifest(table, version)[bucket]
-        )
-
-    wh_schema = ("gl_code string, category string, year int, month int, "
-                 "department string, amount decimal(18,2)")
-    led_schema = "gl_code string, status string, last_seen date"
+    def read_bucket(version: int, bucket: str) -> DataFrame:
+        return read_snapshot(spark, table, version=version, buckets=[bucket])
 
     for i, (m, batch) in enumerate(batches):
         version = i + 1
@@ -753,11 +747,11 @@ def ingest_monthly_snapshot_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             wh = upsert_keep_last(
-                read_bucket(version - 1, "warehouse", wh_schema),
+                read_bucket(version - 1, "warehouse"),
                 facts, key,
             ).select(*cols)
             ledger = qa_ledger_merge(
-                read_bucket(version - 1, "ledger", led_schema),
+                read_bucket(version - 1, "ledger"),
                 misses, ["gl_code"], seen_col=seen,
             ).select("gl_code", "status", "last_seen")
         wh_d = os.path.join(table, f"wh-g{version}")
@@ -789,12 +783,12 @@ def ingest_monthly_snapshot_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union over the three committed ledger versions instead of three
     # collect jobs — same rows, one job's fixed latency (guide §5).
     led_rows = (
-        read_bucket(1, "ledger", led_schema).withColumn("v", F.lit(1))
+        read_bucket(1, "ledger").withColumn("v", F.lit(1))
         .unionByName(
-            read_bucket(2, "ledger", led_schema).withColumn("v", F.lit(2))
+            read_bucket(2, "ledger").withColumn("v", F.lit(2))
         )
         .unionByName(
-            read_bucket(3, "ledger", led_schema).withColumn("v", F.lit(3))
+            read_bucket(3, "ledger").withColumn("v", F.lit(3))
         )
         .collect()
     )
@@ -830,12 +824,12 @@ def ingest_monthly_snapshot_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("snapshot", "department", "month", "x.measure", "x.cents")
 
     def wh_asof(ts: float) -> DataFrame:
-        return read_bucket(as_of_version(table, ts), "warehouse", wh_schema)
+        return read_bucket(as_of_version(table, ts), "warehouse")
 
     v1 = measures(wh_asof(1500.0).where(F.col("month") == 1), "v1_asof")
     v2 = measures(wh_asof(2500.0).where(F.col("month") == 2), "v2_asof")
     head = measures(
-        read_bucket(3, "warehouse", wh_schema).where(
+        read_bucket(3, "warehouse").where(
             F.col("month").isin(2, 3)
         ),
         "v3_head",

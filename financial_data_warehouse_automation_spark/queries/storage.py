@@ -21,6 +21,7 @@ from financial_data_warehouse_automation_spark.functions.scalars import md5_pref
 from financial_data_warehouse_automation_spark.queries._helpers import (
     assert_multiset_equal,
     cow_rewrite,
+    drain,
     price_cdc,
     range_bucket,
     seed_bucketed,
@@ -141,7 +142,7 @@ def orders_snapshot_cow_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = (F.col("ckey") >= upd_lo) & (F.col("ckey") < upd_hi)
     dele = (F.col("ckey") >= del_lo) & (F.col("ckey") < del_hi)
     v2_map = cow_rewrite(
-        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+        spark, table, 1, touched, price_cdc(upd, dele), "g2"
     )
     assert try_commit(table, 1, v2_map) == 2
 
@@ -265,26 +266,25 @@ def orders_snapshot_concurrent_commit(
     dele = (F.col("ckey") >= del_lo) & (F.col("ckey") < del_hi)
 
     # both writers read base v1
-    a_base = read_manifest(table, 1)
     b_base = read_manifest(table, 1)
 
     # writer A: +50 price on its range, COW over its touched buckets
     a_map = cow_rewrite(
-        spark, table, a_base,
+        spark, table, 1,
         sorted({bucket_of(upd_lo), bucket_of(upd_hi - 1)}),
         price_cdc(upd, bump=50.0), "g2",
     )
     assert try_commit(table, 1, a_map) == 2
 
     # writer B: delete its range — FIRST attempt against the stale base
-    def b_rewrite(src_map, gen):
+    def b_rewrite(version, gen):
         return cow_rewrite(
-            spark, table, src_map,
+            spark, table, version,
             sorted({bucket_of(del_lo), bucket_of(del_hi - 1)}),
             lambda df: df.where(~dele), gen,
         )
 
-    stale_map = b_rewrite(b_base, "g2b")  # staged against the stale base
+    stale_map = b_rewrite(1, "g2b")  # staged against the stale base
     conflicted = False
     try:
         try_commit(table, 1, stale_map)
@@ -295,7 +295,7 @@ def orders_snapshot_concurrent_commit(
     # rebase: re-read latest (carries A's update), re-apply, commit v3
     latest = read_manifest(table)
     assert latest == a_map, "latest must be A's v2"
-    assert try_commit(table, 2, b_rewrite(latest, "g3")) == 3
+    assert try_commit(table, 2, b_rewrite(2, "g3")) == 3
 
     def agg(version: int, tag: str) -> DataFrame:
         return (
@@ -566,7 +566,7 @@ def orders_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert len(touched) <= 4, touched
     v2_map = cow_rewrite(
-        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+        spark, table, 1, touched, price_cdc(upd, dele), "g2"
     )
     assert try_commit(table, 1, v2_map) == 2
 
@@ -806,7 +806,7 @@ def orders_snapshot_incremental_mv(
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
     v2_map = cow_rewrite(
-        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+        spark, table, 1, touched, price_cdc(upd, dele), "g2"
     )
     assert try_commit(table, 1, v2_map) == 2
 
@@ -1274,7 +1274,7 @@ def orders_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
     v2_map = cow_rewrite(
-        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+        spark, table, 1, touched, price_cdc(upd, dele), "g2"
     )
     assert try_commit(table, 1, v2_map) == 2
 
@@ -1370,6 +1370,7 @@ def warehouse_mv_atomic_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     either table's size."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
         read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -1398,10 +1399,9 @@ def warehouse_mv_atomic_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert try_commit(table, 0, stage(o, "g1")) == 1
 
     def read_pair(version: int) -> tuple[DataFrame, DataFrame]:
-        mani = read_manifest(table, version)
-        return (
-            spark.read.parquet(mani["base"]),
-            spark.read.parquet(mani["mv"]),
+        return tuple(
+            read_snapshot(spark, table, version=version, buckets=[b])
+            for b in ("base", "mv")
         )
 
     def consistent(version: int) -> list:
@@ -1871,8 +1871,8 @@ def orders_deletion_vector_merge_on_read(
     doomed = {
         str(b): sorted(
             r.o_orderkey
-            for r in spark.read.parquet(v1_map[str(b)]).where(dele)
-            .select("o_orderkey").collect()
+            for r in read_snapshot(spark, table, version=1, buckets=[b])
+            .where(dele).select("o_orderkey").collect()
         )
         for b in touched
     }
@@ -1886,7 +1886,7 @@ def orders_deletion_vector_merge_on_read(
     # v3: compaction applies the DV and drops it — only touched
     # buckets rewrite; everything else is shared with v1/v2
     v3_map = cow_rewrite(
-        spark, table, v1_map, touched, lambda df: df.where(~dele), "g3"
+        spark, table, 1, touched, lambda df: df.where(~dele), "g3"
     )
     assert try_commit(table, 2, v3_map) == 3
     shared = [b for b in v1_map if v3_map[b] == v1_map[b]]
@@ -2174,7 +2174,7 @@ def orders_branch_wap_fastforward(
     upd_lo, upd_hi = maxck // 4, maxck // 4 + max(1, maxck // 20)
     upd = (F.col("ckey") >= upd_lo) & (F.col("ckey") < upd_hi)
     etl_map = cow_rewrite(
-        spark, table, v1_map,
+        spark, table, 1,
         range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1),
         price_cdc(upd), "etl",
     )
@@ -2199,7 +2199,7 @@ def orders_branch_wap_fastforward(
     # and GC reclaims exactly its staged directory
     assert create_branch(table, "bad", from_version=2) == 1
     d_bad = os.path.join(table, "b0-bad")
-    spark.read.parquet(branch_head["0"]).withColumn(
+    read_snapshot(spark, table, version=2, buckets=["0"]).withColumn(
         "o_orderkey", F.lit(None).cast("long")
     ).write.parquet(d_bad)
     bad_map = dict(branch_head)
@@ -2343,7 +2343,7 @@ def orders_shallow_clone_divergence(
     del_lo, del_hi = (3 * maxck) // 5, (3 * maxck) // 5 + max(1, maxck // 50)
     dele = (F.col("ckey") >= del_lo) & (F.col("ckey") < del_hi)
     c_map = cow_rewrite(
-        spark, clone_t, v1_map,
+        spark, clone_t, 1,
         range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1),
         lambda df: df.where(~dele), "c2",
     )
@@ -2358,7 +2358,7 @@ def orders_shallow_clone_divergence(
         str(b) for b in range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1)
     ]
     s_map = cow_rewrite(
-        spark, src_t, v1_map, upd_buckets, price_cdc(upd), "s2"
+        spark, src_t, 1, upd_buckets, price_cdc(upd), "s2"
     )
     assert try_commit(src_t, 1, s_map) == 2
 
@@ -2489,7 +2489,7 @@ def orders_snapshot_describe_history(
     dbs = set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     assert not (ubs & dbs)  # the oracle's touched-count sum needs this
     v2_map = cow_rewrite(
-        spark, table, v1_map, sorted(ubs | dbs), price_cdc(upd, dele), "g2"
+        spark, table, 1, sorted(ubs | dbs), price_cdc(upd, dele), "g2"
     )
     assert try_commit(
         table, 1, v2_map,
@@ -2624,7 +2624,7 @@ def orders_snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v2: the +100 update, COW on its buckets
     v2_map = cow_rewrite(
-        spark, table, v1_map,
+        spark, table, 1,
         range(bucket_of(upd_lo), bucket_of(upd_hi - 1) + 1),
         price_cdc(upd), "g2",
     )
@@ -2633,7 +2633,7 @@ def orders_snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v3: the delete, COW on its buckets
     v3_map = cow_rewrite(
-        spark, table, v2_map,
+        spark, table, 2,
         range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1),
         lambda df: df.where(~dele), "g3",
     )
@@ -2767,8 +2767,8 @@ def orders_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed = {
         str(b): sorted(
             r.o_orderkey
-            for r in spark.read.parquet(v1_map[str(b)]).where(upd)
-            .select("o_orderkey").collect()
+            for r in read_snapshot(spark, table, version=1, buckets=[b])
+            .where(upd).select("o_orderkey").collect()
         )
         for b in touched
     }
@@ -2813,11 +2813,7 @@ def orders_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", ckpt)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(q)
     feed = spark.read.parquet(out)
     prio = F.when(
         F.col("change_type").isin("insert", "update_postimage"), 2
@@ -2845,7 +2841,7 @@ def orders_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in touched:
         d3 = os.path.join(table, f"b{b}-g3")
         (
-            spark.read.parquet(v1_map[str(b)])
+            read_snapshot(spark, table, version=1, buckets=[b])
             .where(~upd)
             .unionByName(
                 spark.read.parquet(d_post).where(fb == F.lit(b))
@@ -3005,9 +3001,9 @@ def orders_evolved_dv_pruned_read(
     # v3: merge-on-read DELETE inside k2 — zero rewrite; schema and
     # stats carry forward untouched
     doomed = sorted(
-        r.f1
-        for r in spark.read.parquet(v1_map["k2"])
-        .where(F.col("f1") % 97 == 0).select("f1").collect()
+        r.okey
+        for r in read_snapshot(spark, table, version=1, buckets=["k2"])
+        .where(F.col("okey") % 97 == 0).select("okey").collect()
     )
     assert doomed, "the delete predicate selected nothing"
     assert try_commit(
@@ -3447,7 +3443,7 @@ def orders_concurrent_same_bucket_merge(
             # bucket 3 (+1000.00 on its okey%10==5 keys)
             d_b = os.path.join(table, "rival-b3")
             (
-                spark.read.parquet(v1_map["3"])
+                read_snapshot(spark, table, version=1, buckets=["3"])
                 .withColumn(
                     "cents",
                     F.when(
@@ -3688,9 +3684,9 @@ def orders_sorted_merge_keep_last(
     # the fence: a re-pointed bucket drops its declaration and the
     # fast path REFUSES (falls back) instead of computing wrong rows
     d_rw = os.path.join(table, "g2-b3")
-    spark.read.parquet(v1_map["3"]).orderBy(F.rand(7)).write.parquet(
-        d_rw
-    )
+    read_snapshot(spark, table, version=1, buckets=["3"]).orderBy(
+        F.rand(7)
+    ).write.parquet(d_rw)
     v2_map = dict(v1_map)
     v2_map["3"] = d_rw
     assert try_commit(table, 1, v2_map) == 2

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from financial_data_warehouse_automation_spark.queries._helpers import (
     assert_multiset_equal,
     cow_rewrite,
+    drain,
     money,
     price_cdc,
     range_bucket,
@@ -1074,7 +1075,7 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert not (upd_buckets & del_buckets), \
             "CDC buckets must be disjoint"
         v2_map = cow_rewrite(
-            spark, table, v1_map, sorted(upd_buckets | del_buckets),
+            spark, table, 1, sorted(upd_buckets | del_buckets),
             price_cdc(upd, dele), "g2",
         )
         assert try_commit(table, 1, v2_map) == 2
@@ -1117,11 +1118,7 @@ def orders_cdf_stream_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     listing_before = sink_listing()
     q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-        q2.awaitTermination()
+    drain(q2)
     assert sink_listing() == listing_before, "replay wrote to the sink"
 
     # incremental-MV composition: signed deltas off the feed maintain
@@ -1229,8 +1226,8 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica outgrows one write — the commit protocol is unchanged);
     the feed itself plans one task per changed source bucket."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
+        committed_through,
         latest_version,
-        read_manifest_meta,
         read_snapshot,
         try_commit,
     )
@@ -1327,7 +1324,7 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
         )
         v2_map = cow_rewrite(
-            spark, a_t, v1_map, touched, price_cdc(upd, dele), "g2"
+            spark, a_t, 1, touched, price_cdc(upd, dele), "g2"
         )
         assert try_commit(a_t, 1, v2_map) == 2
         # r16 NEGATIVE RESULT, kept as the r15 explicit drain: removing
@@ -1344,7 +1341,9 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         v3_map = dict(v2_map)
         for b in range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1):
             d3 = os.path.join(a_t, f"b{b}-g3")
-            post = price_cdc(upd)(spark.read.parquet(v1_map[str(b)]))
+            post = price_cdc(upd)(
+                read_snapshot(spark, a_t, version=1, buckets=[b])
+            )
             post.write.parquet(d3)
             v3_map[str(b)] = d3
         assert try_commit(a_t, 2, v3_map) == 3
@@ -1370,14 +1369,10 @@ def orders_cdf_replica_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_ver = latest_version(b_t)
     listing = sorted(os.listdir(b_t))
     q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-        q2.awaitTermination()
+    drain(q2)
     assert latest_version(b_t) == b_ver
     assert sorted(os.listdir(b_t)) == listing
-    assert read_manifest_meta(b_t).get("_txn", {}).get("cdf") is not None
+    assert committed_through(b_t, "cdf") >= 0
 
     return b_head.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -1438,9 +1433,9 @@ def orders_cdf_replica_bucketed(
     a 0.1% churn commit costs 0.1% of the table, not a full rewrite
     (the single-bucket form rewrites everything every fold)."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
+        committed_through,
         latest_version,
         read_manifest,
-        read_manifest_meta,
         read_snapshot,
         table_history,
         try_commit,
@@ -1522,12 +1517,8 @@ def orders_cdf_replica_bucketed(
     # orders_cdf_replica_pipeline — same restructure, the restart
     # probe below still starts fresh)
     live = start()
-
-    def drain() -> None:
-        live.processAllAvailable()
-
     try:
-        drain()  # bootstrap: all 8 buckets arrive as inserts
+        live.processAllAvailable()  # bootstrap: all 8 buckets arrive as inserts
         assert latest_version(b_t) == 1
         b_v1 = read_manifest(b_t)
         assert sorted(b_v1) == [str(b) for b in range(n_buckets)], sorted(b_v1)
@@ -1543,10 +1534,10 @@ def orders_cdf_replica_bucketed(
         )
         assert len(touched) < n_buckets, "churn must be partial"
         v2_map = cow_rewrite(
-            spark, a_t, v1_map, touched, price_cdc(upd, dele), "g2"
+            spark, a_t, 1, touched, price_cdc(upd, dele), "g2"
         )
         assert try_commit(a_t, 1, v2_map) == 2
-        drain()
+        live.processAllAvailable()
 
         # THE scale assert: the fold re-pointed exactly A's churned
         # buckets; every untouched bucket is the SAME directory string
@@ -1566,11 +1557,13 @@ def orders_cdf_replica_bucketed(
         v3_map = dict(v2_map)
         for b in del_buckets:
             d3 = os.path.join(a_t, f"b{b}-g3")
-            post = price_cdc(upd)(spark.read.parquet(v1_map[str(b)]))
+            post = price_cdc(upd)(
+                read_snapshot(spark, a_t, version=1, buckets=[b])
+            )
             post.write.parquet(d3)
             v3_map[str(b)] = d3
         assert try_commit(a_t, 2, v3_map) == 3
-        drain()
+        live.processAllAvailable()
     finally:
         live.stop()
         live.awaitTermination()
@@ -1581,14 +1574,10 @@ def orders_cdf_replica_bucketed(
     b_ver = latest_version(b_t)
     listing = sorted(os.listdir(b_t))
     q2 = start()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-        q2.awaitTermination()
+    drain(q2)
     assert latest_version(b_t) == b_ver
     assert sorted(os.listdir(b_t)) == listing
-    assert read_manifest_meta(b_t).get("_txn", {}).get("cdf") is not None
+    assert committed_through(b_t, "cdf") >= 0
 
     # exact replication over the full wide row, both directions
     a_head = read_snapshot(spark, a_t).select(
@@ -1706,7 +1695,7 @@ def orders_cdf_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         | set(range(bucket_of(del_lo), bucket_of(del_hi - 1) + 1))
     )
     v2_map = cow_rewrite(
-        spark, table, v1_map, touched, price_cdc(upd, dele), "g2"
+        spark, table, 1, touched, price_cdc(upd, dele), "g2"
     )
     assert try_commit(table, 1, v2_map) == 2
 
@@ -1731,11 +1720,7 @@ def orders_cdf_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", ckpt)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(q)
     feed = spark.read.parquet(out)
 
     # the SCD2 fold: per key, every opening event's interval runs to
@@ -1991,10 +1976,8 @@ def orders_cdf_schema_evolution_feed(
 
     q = feed.writeStream.foreachBatch(
         snapshot_state_commit_batch(b_t, merge)
-    ).option(
-        "checkpointLocation", os.path.join(work, "ckpt")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination()
+    ).option("checkpointLocation", os.path.join(work, "ckpt")).start()
+    drain(q)
     assert latest_version(b_t) == 1
 
     # feed semantics == reader semantics on the evolved table
@@ -2029,10 +2012,7 @@ def orders_cdf_schema_evolution_feed(
         "commit_version", "change_type", "okey", "revenue_cents",
     ], bfeed.columns
     sink = f"cdfevo_branch_{os.getpid()}"
-    bq = bfeed.writeStream.format("memory").queryName(sink).trigger(
-        availableNow=True
-    ).start()
-    bq.awaitTermination()
+    drain(bfeed.writeStream.format("memory").queryName(sink).start())
     bdf = spark.sql(f"SELECT * FROM {sink}")
     # r16: ONE collected union instead of ~9 tail jobs (insert count,
     # delete count, a PER-BUCKET Python count loop, c2 count, two
@@ -2061,11 +2041,13 @@ def orders_cdf_schema_evolution_feed(
             )
         )
         .unionByName(
-            spark.read.parquet(v1b["c2"]).agg(
+            read_snapshot(
+                spark, a_t, version=1, branch="audit", buckets=["c2"]
+            ).agg(
                 F.lit("c2").alias("t"),
                 F.count(F.lit(1)).cast("bigint").alias("a"),
                 nul.alias("b"),
-                F.sum("f1").cast("bigint").alias("c"),
+                F.sum("okey").cast("bigint").alias("c"),
             )
         )
         .collect()

@@ -3148,7 +3148,7 @@ def doc_takedown_deletion_vector(
     for b in sorted(doomed):
         d3 = os.path.join(table, f"b{b}-g3")
         (
-            spark.read.parquet(v1_map[b])
+            read_snapshot(spark, table, version=1, buckets=[b])
             .where(~F.col("doc_id").isin(doomed[b]))
             .write.parquet(d3)
         )
@@ -3237,6 +3237,7 @@ def doc_takedown_feed_propagation(
     )
     from financial_data_warehouse_automation_spark.queries._helpers import (
         assert_multiset_equal,
+        drain,
         range_bucket,
         scratch_dir,
     )
@@ -3342,10 +3343,8 @@ def doc_takedown_feed_propagation(
 
     q = feed.writeStream.foreachBatch(
         snapshot_state_commit_batch(b_t, merge)
-    ).option(
-        "checkpointLocation", os.path.join(work, "ckpt")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination()
+    ).option("checkpointLocation", os.path.join(work, "ckpt")).start()
+    drain(q)
 
     # subscription-maintained compliance == scan-time compliance
     b_head = read_snapshot(spark, b_t).select(*idx_cols)

@@ -266,7 +266,7 @@ def warehouse_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # writer A: the A2 merge, COW over only the buckets updates touch
     a_base = read_manifest(table, 1)
     merged_a = upsert_keep_last(
-        spark.read.parquet(a_base["1997"]), updates,
+        read_snapshot(spark, table, version=1, buckets=["1997"]), updates,
         ["custkey", "year", "month"],
     )
     a_map = dict(a_base)
@@ -279,23 +279,24 @@ def warehouse_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # writer B: concurrent quality delete staged against the SAME base
     dele = (F.col("custkey") % 7 == 0) & (F.col("year") == 1997)
 
-    def b_rewrite(src_map: dict[str, str], gen: str) -> dict[str, str]:
-        out = dict(src_map)
+    def b_rewrite(version: int, gen: str) -> dict[str, str]:
+        out = read_manifest(table, version)
         d = os.path.join(table, gen)
-        spark.read.parquet(src_map["1997"]).where(~dele).write.parquet(d)
+        read_snapshot(spark, table, version=version, buckets=["1997"]) \
+            .where(~dele).write.parquet(d)
         out["1997"] = d
         return out
 
     conflicted = False
     try:
-        try_commit(table, 1, b_rewrite(a_base, "g2b"))
+        try_commit(table, 1, b_rewrite(1, "g2b"))
     except SnapshotConflict:
         conflicted = True
     assert conflicted, "stale-base merge must conflict, not clobber"
 
     latest = read_manifest(table)
     assert latest == a_map, "rebase must see A's committed merge"
-    assert try_commit(table, 2, b_rewrite(latest, "g3")) == 3
+    assert try_commit(table, 2, b_rewrite(2, "g3")) == 3
 
     # time travel: the pre-writer warehouse is still byte-stable
     assert sorted(map(tuple, agg(1, "v1").collect())) == v1_before
@@ -374,7 +375,7 @@ def qa_ledger_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(warehouse) — and each transition is the one full-outer join
     qa_ledger_merge already pays."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        read_manifest,
+        read_snapshot,
         try_commit,
     )
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
@@ -395,9 +396,7 @@ def qa_ledger_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         return try_commit(table, base, {"ledger": d})
 
     def read_ledger(version: int) -> DataFrame:
-        return spark.read.schema("custkey long, status string, last_seen date").parquet(
-            read_manifest(table, version)["ledger"]
-        )
+        return read_snapshot(spark, table, version=version, buckets=["ledger"])
 
     led1 = inactive_in(1996).select(
         "custkey",

@@ -62,8 +62,7 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float]:
     return int(n), ns / 1e6
 
 
-def get_spark(app_name: str = "financial_data_warehouse_automation_spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "financial_data_warehouse_automation_spark") -> SparkSession:
     """Build (or reuse) the session.
 
     ``spark.sql.shuffle.partitions`` is sized to the executor-thread
@@ -75,7 +74,7 @@ def get_spark(app_name: str = "financial_data_warehouse_automation_spark",
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
+        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

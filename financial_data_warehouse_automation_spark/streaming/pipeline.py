@@ -707,89 +707,31 @@ def run_events_kmv_state(
 
 
 def snapshot_commit_batch(table_dir: str, writer_id: str = "stream"):
-    """foreachBatch: land one micro-batch as an immutable bucket
-    directory and publish it through the manifest CAS
-    (operators/snapshots.py) — EXACTLY-ONCE table appends from an
-    at-least-once stream, keyed the way Delta's idempotent writes are:
-    a PER-WRITER transaction ledger ``_txn = {writer_id:
-    last_batch_id}`` carried in the manifest's commit metadata
-    (txnAppId -> txnVersion). The r12 form keyed replays on batch id
-    ALONE (version = batch_id + 1), which the r12 advisor showed
-    silently drops every batch of a NEW stream started against an
-    existing table with a fresh checkpoint (its batch ids restart at 0
-    and all hit the already-committed fast path). The ledger fixes
-    both advisor findings at once:
+    """foreachBatch: append each micro-batch to a snapshot table exactly
+    once, however often the stream re-delivers it.
 
-    * Replay detection is per writer — ``_txn[writer_id] >= batch_id``
-      means THIS writer already committed this batch: no-op. A
-      DIFFERENT writer's batch 0 appends normally under its own ledger
-      entry (two independent streams can feed one table, exactly as
-      two Delta txnAppIds can).
-    * The commit REBASES ON LATEST — ``read_manifest(table_dir)`` —
-      inside a :class:`SnapshotConflict` retry loop, so table versions
-      are decoupled from batch ids: maintenance commits (compaction,
-      GC-driven rewrites) and other writers may interleave, and a
-      retention-expired historical manifest can never be needed as a
-      rebase base (the latest always survives
-      :func:`expire_snapshots`'s clamp — the r12 advisor's
-      FileNotFoundError is unreachable by construction).
-
-    Protocol per batch: ledger check (no-op if replay) → stage the
-    batch ``mode("overwrite")`` into its own ``<writer>-batch-<id>``
-    dir (a crash between stage and commit leaves an orphan the next
-    replay overwrites, and ``min_age_s`` GC would eventually reclaim)
-    → CAS-commit latest+1 with the bumped ledger, rebasing on conflict
-    until either the commit lands or the ledger shows our own replay
-    won the race.
-
-    Readers always see a consistent prefix of each writer's stream:
-    the ledger value for a writer is the last batch whose rows are
-    fully published, and every referenced bucket is immutable.
-
-    Operational contract (same as Delta): the ledger lives in the
-    LATEST manifest's metadata, so any maintenance commit (compaction,
-    rewrite) must carry ``_txn`` forward into its own meta — dropping
-    it would forget which batches are already applied and let a replay
-    double-write. Pinned in
-    tests/test_snapshots.py::test_snapshot_commit_batch_survives_maintenance_and_retention."""
+    The fold stages the batch as the immutable directory
+    ``<writer>-batch-<id>`` and adds it as bucket ``<writer>-b<id>`` on
+    top of the latest mapping. It reads no bucket, so a concurrent
+    commit only makes it rebase, never re-fold. Ledger, replay check
+    and commit loop are :func:`operators.snapshots.stream_commit`'s;
+    several writers can append to one table, each under its own
+    ``writer_id``. A crash between staging and commit leaves an
+    unreferenced directory that the replay overwrites (and that
+    ``expire_snapshots`` would reclaim)."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        SnapshotConflict,
-        latest_version,
-        read_manifest,
-        read_manifest_meta,
-        try_commit,
+        stream_commit,
     )
 
-    def committed_through(latest: int) -> int:
-        if latest == 0:
-            return -1
-        meta = read_manifest_meta(table_dir, latest)
-        return meta.get("_txn", {}).get(writer_id, -1)
-
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if committed_through(latest_version(table_dir)) >= batch_id:
-            return  # replayed batch (same writer): already committed
-        d = os.path.join(table_dir, f"{writer_id}-batch-{batch_id}")
-        batch.write.mode("overwrite").parquet(d)
-        while True:
-            latest = latest_version(table_dir)
-            if committed_through(latest) >= batch_id:
-                return  # our own replay won the stage-then-commit race
-            base = read_manifest(table_dir) if latest > 0 else {}
-            txn = dict(
-                read_manifest_meta(table_dir, latest).get("_txn", {})
-            ) if latest > 0 else {}
-            txn[writer_id] = batch_id
-            mapping = dict(base)
-            mapping[f"{writer_id}-b{batch_id}"] = d
-            try:
-                try_commit(
-                    table_dir, latest, mapping,
-                    meta={"_writer": writer_id, "_txn": txn},
-                )
-                return
-            except SnapshotConflict:
-                continue  # someone else published latest+1: rebase
+        def fold(version, manifest, suffix):
+            d = os.path.join(
+                table_dir, f"{writer_id}-batch-{batch_id}{suffix}"
+            )
+            batch.write.mode("overwrite").parquet(d)
+            return (), lambda base: {**base, f"{writer_id}-b{batch_id}": d}
+
+        stream_commit(table_dir, writer_id, batch_id, fold)
 
     return apply
 
@@ -814,88 +756,42 @@ def run_events_snapshot_commit(
 
 
 def snapshot_state_commit_batch(table_dir: str, merge, writer_id: str = "cdf"):
-    """foreachBatch: maintain a DERIVED STATE table under the same
-    per-writer exactly-once ledger as :func:`snapshot_commit_batch`,
-    but where each commit REPLACES the single ``state`` bucket with
-    ``merge(previous_state, batch)`` — the shape of every
-    subscription-maintained derivative (replicas, MVs, indexes):
-    version N's state is a pure fold of the feed's first N batches.
+    """foreachBatch: maintain a derived state table whose single
+    ``state`` bucket is replaced by ``merge(previous_state, batch)`` on
+    every commit, so version N's state is a fold of the feed's first N
+    batches (replicas, materialized views, indexes).
 
     ``merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame``
-    receives the PREVIOUS committed state (None before the first
-    commit) and the micro-batch, and returns the full new state. The
-    ledger check runs BEFORE any recompute, so replayed batches cost
-    a metadata read and nothing else. Conflict DETECTION (r15 — the
-    r14 verdict's task 1b): the commit loop re-checks, before every
-    CAS attempt, that the table state the fold READ is still the
-    table's state; if a concurrent commit replaced it, the stale fold
-    is DISCARDED and the merge re-runs against the new state — a
-    rival's effect can no longer be silently clobbered by the last
-    rebaser (Iceberg/Delta validate exactly this overlap at commit
-    time). Two writers folding the same feed still interleave their
-    STATES nondeterministically — use separate derived tables for
-    separate folds — but neither can erase the other's commit.
+    receives the committed state the fold read (``None`` before the
+    first commit), through ``read_snapshot`` so its deletion vector
+    and column mapping apply, and returns the full new state. The fold
+    reads the whole manifest: any concurrent commit makes
+    :func:`operators.snapshots.stream_commit` discard the staged state
+    and merge again against the new one, so neither writer's commit is
+    lost. Two writers folding one feed into one table still interleave
+    their states in no fixed order; give separate folds separate
+    tables. Replays return before ``merge`` runs.
 
-    Scale note: "replace the state bucket" is the DEMO layout; a
-    large derived table would stage a partitioned write and commit
-    per-bucket COW exactly like the batch MERGE path
-    (queries/warehouse.warehouse_upsert_snapshot) — the ledger and
-    commit protocol here are unchanged by that swap."""
+    Replacing one bucket is the small-table layout;
+    :func:`snapshot_partitioned_state_commit_batch` rewrites only the
+    buckets a batch touches."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        SnapshotConflict,
-        latest_version,
-        read_manifest,
-        read_manifest_meta,
         read_snapshot,
-        try_commit,
+        stream_commit,
     )
 
-    def committed_through(latest: int) -> int:
-        if latest == 0:
-            return -1
-        meta = read_manifest_meta(table_dir, latest)
-        return meta.get("_txn", {}).get(writer_id, -1)
-
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if committed_through(latest_version(table_dir)) >= batch_id:
-            return  # replay: already folded into the state
-        spark = batch.sparkSession
-        while True:  # (re-)fold loop: runs again when the base moved
-            latest = latest_version(table_dir)
-            fold_base = (
-                read_manifest(table_dir, latest) if latest > 0 else {}
+        def fold(version, manifest, suffix):
+            prev = read_snapshot(
+                batch.sparkSession, table_dir, version=version
+            ) if manifest else None
+            d = os.path.join(
+                table_dir, f"{writer_id}-state-{batch_id}{suffix}"
             )
-            # the previous state through the one reader, so a deletion
-            # vector or column mapping on it is honored by the fold
-            prev = (
-                read_snapshot(spark, table_dir, version=latest)
-                if fold_base else None
-            )
-            d = os.path.join(table_dir, f"{writer_id}-state-{batch_id}")
             merge(prev, batch).write.mode("overwrite").parquet(d)
-            while True:
-                latest = latest_version(table_dir)
-                if committed_through(latest) >= batch_id:
-                    return  # our own replay won the race
-                base = read_manifest(table_dir) if latest > 0 else {}
-                if base != fold_base:
-                    # conflict DETECTED: a concurrent commit changed
-                    # the state our merge read — the staged fold is
-                    # stale; recompute against the new state instead
-                    # of clobbering the rival's effect
-                    break
-                txn = dict(
-                    read_manifest_meta(table_dir, latest).get("_txn", {})
-                ) if latest > 0 else {}
-                txn[writer_id] = batch_id
-                try:
-                    try_commit(
-                        table_dir, latest, {"state": d},
-                        meta={"_writer": writer_id, "_txn": txn},
-                    )
-                    return
-                except SnapshotConflict:
-                    continue
+            return None, lambda base: {"state": d}
+
+        stream_commit(table_dir, writer_id, batch_id, fold)
 
     return apply
 
@@ -903,140 +799,69 @@ def snapshot_state_commit_batch(table_dir: str, merge, writer_id: str = "cdf"):
 def snapshot_partitioned_state_commit_batch(
     table_dir: str, merge, bucket_of, writer_id: str = "cdf",
 ):
-    """foreachBatch: the PARTITIONED form of
-    :func:`snapshot_state_commit_batch` (r14 — the swap its scale note
-    promised): the derived table is bucketed by key, and each
-    micro-batch rewrites ONLY the buckets its keys touch — untouched
-    buckets are carried into the new manifest as the same directory
-    strings (zero-copy COW sharing, asserted by the registered query),
-    exactly the per-bucket MERGE layout of
-    queries/warehouse.warehouse_upsert_snapshot driven by a stream.
+    """foreachBatch: the bucketed form of
+    :func:`snapshot_state_commit_batch`. Each micro-batch rewrites only
+    the buckets its keys touch; untouched buckets keep their directory
+    strings in the new manifest (copy-on-write sharing, the per-bucket
+    MERGE layout of queries/warehouse.warehouse_upsert_snapshot driven
+    by a stream).
 
-    ``bucket_of(df) -> Column`` — an int bucket id derived from the
-    row's key columns (must be stable across batches: a key's bucket
-    is its home for life, the same contract the CDF source relies on).
+    ``bucket_of(df) -> Column`` gives a row's int bucket from its key
+    columns and must be stable: a key's bucket is its home for life.
     ``merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame``
-    — receives the previous state OF THE TOUCHED BUCKETS ONLY (None
-    when none exist yet) plus the micro-batch, returns those buckets'
-    full new rows. A touched bucket whose merged content comes back
-    EMPTY is REMOVED from the manifest (a bucket-wide delete must not
-    leave the old directory mapped — that would resurrect its rows).
+    receives the previous state of the touched buckets only (``None``
+    when none exists yet) and returns those buckets' full new rows; a
+    row outside the touched buckets raises ``ValueError``. A touched
+    bucket whose new content is empty is removed from the manifest,
+    so its old directory cannot resurrect deleted rows.
 
-    Exactly-once: the same per-writer ``_txn`` ledger as the single-
-    bucket form — replays return before any recompute; the CAS retry
-    loop REBASES on the latest mapping (re-pointing only this fold's
-    staged buckets), so maintenance commits on OTHER buckets
-    interleave freely with the subscription.
-
-    Conflict DETECTION (r15 — the r14 verdict's task 1b): before
-    every CAS attempt the loop re-checks that no concurrent commit
-    re-pointed, removed, or created one of THIS fold's touched
-    buckets since the fold read its ``prev``. If one did, the staged
-    fold is stale — ``base.update(staged)`` would silently erase the
-    rival's effect (last-rebaser-wins, the r14 verdict's #1 latent
-    trap) — so the merge RE-RUNS against the new state of exactly
-    those buckets and re-stages before retrying, the same
-    commit-time overlap validation Iceberg/Delta perform. Commits
-    that touch only OTHER buckets never trigger a re-fold.
-
-    Scale: fold cost is one key-shuffle of BATCH size against the
-    touched buckets' rows — churn-proportional, never
-    table-proportional; planning (touched-bucket discovery) is one
-    tiny distinct over the batch; the commit is one manifest create."""
+    The fold's read set is its touched buckets: a concurrent commit to
+    one of them re-runs the merge against the new state (see
+    :func:`operators.snapshots.stream_commit`), while commits to other
+    buckets only rebase it. Cost follows the churn, not the table: one
+    distinct over the batch to find the touched buckets, one merge of
+    the batch against their rows, one manifest create."""
     from financial_data_warehouse_automation_spark.operators.snapshots import (
-        SnapshotConflict,
-        latest_version,
-        read_manifest,
-        read_manifest_meta,
         read_snapshot,
-        try_commit,
+        stream_commit,
     )
 
-    def committed_through(latest: int) -> int:
-        if latest == 0:
-            return -1
-        meta = read_manifest_meta(table_dir, latest)
-        return meta.get("_txn", {}).get(writer_id, -1)
-
     def apply(batch: DataFrame, batch_id: int) -> None:
-        latest = latest_version(table_dir)
-        if committed_through(latest) >= batch_id:
-            return  # replay: already folded into the state
-        spark = batch.sparkSession
-        touched = sorted(
-            r.pb for r in
-            batch.select(bucket_of(batch).alias("pb")).distinct()
-            .collect()
-        )
-        if not touched:
-            return  # empty batch: nothing to fold, nothing to commit
-        attempt = 0
-        while True:  # (re-)fold loop: runs again when a touched
-            # bucket moved under us between fold and commit
-            latest = latest_version(table_dir)
-            mapping = read_manifest(table_dir, latest) if latest > 0 else {}
-            # the exact (bucket -> dir) state this fold reads; the
-            # commit loop refuses to publish if it changed
-            fold_base = {str(b): mapping.get(str(b)) for b in touched}
-            prev_buckets = [b for b, d in fold_base.items() if d]
+        touched = None
+
+        def fold(version, manifest, suffix):
+            nonlocal touched
+            if touched is None:  # found once, kept across re-folds
+                touched = {
+                    str(r.pb) for r in
+                    batch.select(bucket_of(batch).alias("pb")).distinct()
+                    .collect()
+                }
+            if not touched:
+                return None  # empty batch: nothing to fold or commit
+            held = sorted(b for b in touched if b in manifest)
             prev = read_snapshot(
-                spark, table_dir, version=latest, buckets=prev_buckets
-            ) if prev_buckets else None
-            # attempt-suffixed root: a re-fold must not overwrite a
-            # directory a rival's manifest could meanwhile reference
-            suffix = f"-r{attempt}" if attempt else ""
-            root = os.path.join(
-                table_dir, f"{writer_id}-g{batch_id}{suffix}"
-            )
+                batch.sparkSession, table_dir, version=version, buckets=held
+            ) if held else None
+            root = os.path.join(table_dir, f"{writer_id}-g{batch_id}{suffix}")
             new = merge(prev, batch)
-            # overwrite (r15 advisor): a crash between this staged
-            # write and the manifest commit replays the batch into the
-            # SAME path — errorifexists would kill the stream instead
-            # of recovering; the path is ours alone and unreferenced
             new.withColumn("pb", bucket_of(new)) \
                 .write.mode("overwrite").partitionBy("pb").parquet(root)
             staged = {
                 n.split("=", 1)[1]: os.path.join(root, n)
-                for n in os.listdir(root)
-                if n.startswith("pb=")
+                for n in os.listdir(root) if n.startswith("pb=")
             }
-            unexpected = set(staged) - {str(b) for b in touched}
-            assert not unexpected, (
-                f"merge emitted rows outside the touched buckets: "
-                f"{sorted(unexpected)} — bucket_of must be key-stable"
-            )
-            refold = False
-            while True:
-                latest = latest_version(table_dir)
-                if committed_through(latest) >= batch_id:
-                    return  # our own replay won the race
-                base = read_manifest(table_dir) if latest > 0 else {}
-                if any(
-                    base.get(b) != fold_base[b] for b in fold_base
-                ):
-                    # conflict DETECTED on a bucket this fold read:
-                    # the staged merge is stale — discard and re-fold
-                    # against the new state instead of clobbering the
-                    # concurrent commit's effect
-                    attempt += 1
-                    refold = True
-                    break
-                for b in touched:
-                    base.pop(str(b), None)  # emptied buckets drop out
-                base.update(staged)
-                txn = dict(
-                    read_manifest_meta(table_dir, latest).get("_txn", {})
-                ) if latest > 0 else {}
-                txn[writer_id] = batch_id
-                try:
-                    try_commit(
-                        table_dir, latest, base,
-                        meta={"_writer": writer_id, "_txn": txn},
-                    )
-                    return
-                except SnapshotConflict:
-                    continue
-            if refold:
-                continue
+            unexpected = set(staged) - touched
+            if unexpected:
+                raise ValueError(
+                    f"merge emitted rows outside the touched buckets: "
+                    f"{sorted(unexpected)} — bucket_of must be key-stable"
+                )
+            return sorted(touched), lambda base: {
+                **{b: d for b, d in base.items() if b not in touched},
+                **staged,
+            }
+
+        stream_commit(table_dir, writer_id, batch_id, fold)
 
     return apply

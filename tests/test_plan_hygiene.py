@@ -510,10 +510,11 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 def test_no_snapshot_read_bypasses_read_snapshot():
     """Committed snapshots are read through operators.snapshots'
     read_snapshot, which applies deletion vectors and column mapping.
-    A star-splat ``spark.read.parquet(*dirs)`` over bucket directories
-    under queries/ or streaming/ skips both; only a read of staged,
-    not-yet-committed directories may stay raw, and its line says so
-    with ``# pre-commit read``."""
+    A star-splat ``spark.read.parquet(*dirs)`` over bucket directories,
+    or a read of one bucket looked up in a mapping
+    (``spark.read.parquet(manifest[b])``), under queries/ or streaming/
+    skips both; only a read of staged, not-yet-committed directories may
+    stay raw, and its line says so with ``# pre-commit read``."""
     import ast
     import pathlib
 
@@ -531,7 +532,10 @@ def test_no_snapshot_read_bypasses_read_snapshot():
                     and isinstance(node.func, ast.Attribute)
                     and node.func.attr == "parquet"
                     and re.search(r"\bread\b", ast.unparse(node.func.value))
-                    and any(isinstance(a, ast.Starred) for a in node.args)
+                    and any(
+                        isinstance(a, (ast.Starred, ast.Subscript))
+                        for a in node.args
+                    )
                 ):
                     continue
                 span = lines[node.lineno - 1:node.end_lineno]
@@ -586,3 +590,33 @@ def test_only_snapshots_module_names_store_files():
             if store_name.search(text) or text == "_sidecars":
                 offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, sorted(set(offenders))
+
+
+def test_snapshot_cdf_streams_do_not_use_available_now():
+    """The Python ``snapshot_cdf`` reader does not support
+    ``trigger(availableNow=True)``: Spark falls back to one batch, and a
+    restart whose checkpoint holds an uncommitted batch stops short of
+    head. A function that starts a ``snapshot_cdf`` stream uses the
+    default trigger and ``_helpers.drain`` instead."""
+    import ast
+    import pathlib
+
+    import financial_data_warehouse_automation_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            nodes = list(ast.walk(fn))
+            if any(
+                isinstance(n, ast.Constant) and n.value == "snapshot_cdf"
+                for n in nodes
+            ) and any(
+                isinstance(n, ast.keyword) and n.arg == "availableNow"
+                for n in nodes
+            ):
+                offenders.append(f"{path.relative_to(root)}:{fn.name}")
+    assert not offenders, offenders

@@ -1667,6 +1667,52 @@ def test_partitioned_fold_refolds_on_same_bucket_conflict(
     assert final == {0: 10.0, 2: 99.0, 5: 50.0}, final
 
 
+def test_state_fold_refolds_on_conflict(spark, tmp_path):
+    """The single-bucket twin of the partitioned re-fold test: a rival
+    commits a new state after the fold read the old one. The sink must
+    discard the stale fold, merge again against the rival's state, and
+    stage the re-fold under a fresh directory; both effects survive."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import (
+        read_manifest,
+        read_snapshot,
+    )
+    from financial_data_warehouse_automation_spark.streaming.pipeline import (
+        snapshot_state_commit_batch,
+    )
+
+    table = str(tmp_path / "t")
+    os.makedirs(table)
+    seed = os.path.join(table, "seed-state")
+    spark.createDataFrame(
+        [(0, 10.0), (2, 20.0)], "key bigint, value double"
+    ).write.parquet(seed)
+    try_commit(table, 0, {"state": seed})
+
+    calls = {"n": 0}
+    staged_first = os.path.join(table, "w-state-0")
+
+    def merge(prev, batch):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            # after this fold read prev, a rival bumps key 2 to 99.0
+            rival = os.path.join(table, "rival-state")
+            spark.createDataFrame(
+                [(0, 10.0), (2, 99.0)], "key bigint, value double"
+            ).write.parquet(rival)
+            try_commit(table, 1, {"state": rival})
+        ups = batch.select("key", "value")
+        return prev.join(ups.select("key"), "key", "left_anti") \
+            .unionByName(ups)
+
+    fn = snapshot_state_commit_batch(table, merge, writer_id="w")
+    fn(spark.createDataFrame([(5, 50.0)], "key bigint, value double"), 0)
+
+    assert calls["n"] == 2, "stale fold must be re-run, not committed"
+    assert read_manifest(table)["state"] != staged_first
+    final = {r.key: r.value for r in read_snapshot(spark, table).collect()}
+    assert final == {0: 10.0, 2: 99.0, 5: 50.0}, final
+
+
 def test_dv_read_plan_bounded_across_many_buckets(spark, tmp_path):
     """The r14 verdict's task 2, pinned: deletion vectors spread
     across 120 buckets read as ONE broadcast anti-join — no Union
@@ -1751,6 +1797,7 @@ def test_sortorder_sidecar_carries_and_drops(tmp_path):
 def _cdf_rows(spark, table, tmp_path, **options):
     """Every change row the snapshot_cdf feed of ``table`` emits from
     ``startversion`` to head, drained in one micro-batch."""
+    from financial_data_warehouse_automation_spark.queries._helpers import drain
     from financial_data_warehouse_automation_spark.sources.cdfsource import (
         SnapshotCDFDataSource,
     )
@@ -1760,14 +1807,12 @@ def _cdf_rows(spark, table, tmp_path, **options):
     for k, v in options.items():
         reader = reader.option(k, v)
     out = str(tmp_path / "feed_out")
-    q = (
+    drain(
         reader.load().writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "feed_ckpt"))
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
     return spark.read.parquet(out)
 
 
@@ -1901,3 +1946,54 @@ def test_cdf_expired_start_manifest_raises_retention_error(spark, tmp_path):
     reader = SnapshotCDFStreamReader({"path": table, "keycol": "k"})
     with pytest.raises(ValueError, match=r"manifest-v1\.json .*retention"):
         reader.partitions({"version": 1}, {"version": 3})
+
+
+def test_cdf_drain_reaches_head_after_uncommitted_batch(spark, tmp_path):
+    """A subscription restarted from a checkpoint whose last batch was
+    planned but never committed re-runs that batch, then goes on to the
+    table's head. ``trigger(availableNow=True)`` cannot do this for the
+    Python ``snapshot_cdf`` reader: Spark falls back to one batch and
+    stops after the re-run."""
+    from financial_data_warehouse_automation_spark.queries._helpers import drain
+    from financial_data_warehouse_automation_spark.sources.cdfsource import (
+        SnapshotCDFDataSource,
+    )
+
+    table = str(tmp_path / "t")
+    mapping = {}
+
+    def commit(version):
+        d = os.path.join(table, f"g{version}")
+        spark.range(version * 5, version * 5 + 5).selectExpr(
+            "id AS k", "id * 10 AS v"
+        ).write.parquet(d)
+        mapping[str(version)] = d
+        assert try_commit(table, version - 1, dict(mapping)) == version
+
+    spark.dataSource.register(SnapshotCDFDataSource)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def subscribe():
+        return (
+            spark.readStream.format("snapshot_cdf")
+            .option("path", table).option("keycol", "k")
+            .option("startversion", 0).load()
+            .writeStream.format("parquet")
+            .option("path", out).option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    commit(1)
+    drain(subscribe())
+    commit(2)
+    drain(subscribe())
+    # crash after the last batch was planned, before it was committed
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    commit(3)
+    drain(subscribe())
+    got = sorted(r.k for r in spark.read.parquet(out).collect())
+    assert got == list(range(5, 20)), got
