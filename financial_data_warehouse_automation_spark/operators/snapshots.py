@@ -359,8 +359,9 @@ def stream_commit(table_dir: str, writer_id: str, batch_id: int, fold):
       later mapping. ``suffix`` is ``""`` on the first fold and
       ``-r<n>`` on the n-th re-fold; it goes into the staging directory
       name, so a re-fold never overwrites a directory a committed
-      manifest may name. A first fold may overwrite its own directory:
-      only a crashed attempt of the same batch can have left it.
+      manifest may name. A first fold may overwrite its directory,
+      which only an earlier, uncommitted attempt of this writer's
+      batch can have left.
     * **Read-set check and rebase.** Before every compare-and-swap the
       latest mapping is compared with the fold's on ``reads``. If a
       concurrent commit moved any of them, the staged result is stale
