@@ -82,27 +82,3 @@ def ensure_table(spark: SparkSession, path: str, schema: StructType) -> None:
         if not is_missing_path_error(exc):
             raise
         spark.createDataFrame([], schema).write.mode("ignore").parquet(path)
-
-
-def compact_partition(
-    spark: SparkSession, path: str, target_files: int = 1
-) -> int:
-    """Small-file compaction for one table/partition directory — the
-    maintenance op every streaming-upsert warehouse needs (each
-    micro-batch writes ≥1 file per partition; query-side open cost grows
-    linearly until compaction). Returns the file count before
-    compaction. Rewrite is atomic at the directory level only — run it
-    when no concurrent writer targets the same partition (the streaming
-    upsert's per-period locking provides that window)."""
-    df = spark.read.parquet(path)
-    before = len(df.inputFiles())
-    if before > target_files:
-        compacted = df.coalesce(target_files)
-        # write to the side, then swap — never truncate-then-fail
-        tmp = path.rstrip("/") + "._compact_tmp"
-        compacted.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(path)
-        shutil.move(tmp, path)
-    return before

@@ -18,9 +18,10 @@ transforms:
 
 Scale notes (100 TB): each operator is one shuffle on its key.
 ``upsert_keep_last`` shuffles existing ∪ updates on the natural key —
-with the warehouse partitioned by (year, month), dynamic partition
-overwrite confines the rewrite to the periods present in ``updates``
-(the monthly-load case touches one partition). The 5-column reference
+with the warehouse bucketed by (year, month) period, the streaming
+upsert (streaming/pipeline._upsert_batch) reads and rewrites only the
+periods present in ``updates`` (the monthly-load case touches one
+bucket). The 5-column reference
 key is high-cardinality, so skew-salting is unnecessary; AQE's skew
 split covers pathological keys.
 """

@@ -206,8 +206,8 @@ def scratch_dir(prefix: str) -> str:
     that demonstrate a WRITE-side capability (compaction, schema
     evolution, custom sinks) and so must produce fresh files each run:
     content-addressed reuse would let repeat timings skip the work the
-    query exists to measure (same reasoning as
-    streaming_demo._dedup_state_workdir)."""
+    query exists to measure, and a reused stream checkpoint would turn
+    a repeat run into a no-op resume."""
     import atexit
     import shutil
     import tempfile

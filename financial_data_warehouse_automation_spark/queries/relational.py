@@ -22,6 +22,7 @@ from financial_data_warehouse_automation_spark.queries._helpers import (
     dsum,
     money,
     rate,
+    scratch_dir,
     sql_money,
     sql_rate,
 )
@@ -3519,20 +3520,6 @@ def part_inventory_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rowsink_workdir() -> str:
-    """Per-run /tmp dir for the rowsink demo, removed at process exit
-    (same per-run-not-content-addressed reasoning as
-    queries/streaming_demo._dedup_state_workdir: a reused dir would
-    let repeat timings skip the write)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="rowsink_demo_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return work
-
-
 @query(
     "source_rowsink_roundtrip",
     tags=("source", "datasource-api", "writer", "sink"),
@@ -3566,7 +3553,7 @@ def source_rowsink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(RowSinkDataSource)
     except Exception:
         pass
-    work = _rowsink_workdir()
+    work = scratch_dir("rowsink_demo_")
     (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -3674,8 +3661,6 @@ def orders_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition with target = cluster-preferred file size (128-512 MB)
     and bin-packing instead of a global repartition; the
     size-measured-then-rewrite shape is identical."""
-    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
-
     work = scratch_dir("compaction_demo_")
     frag_p, comp_p = os.path.join(work, "frag"), os.path.join(work, "comp")
     o = load_table(spark, sf_dir, "orders").select(
@@ -3821,8 +3806,6 @@ def orders_sorted_fileskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is that decision at the physical-statistics level."""
     import datetime
 
-    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
-
     work = scratch_dir("fileskip_demo_")
     sorted_p = os.path.join(work, "sorted")
     shuffled_p = os.path.join(work, "shuffled")
@@ -3929,8 +3912,6 @@ def orders_zorder_fileskip_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders_zorder_layout whose locality stats *predict* exactly the
     candidate-file counts this query measures."""
     import datetime
-
-    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
     work = scratch_dir("zskip2d_demo_")
     z_p = os.path.join(work, "zorder")

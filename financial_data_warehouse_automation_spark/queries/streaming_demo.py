@@ -43,47 +43,6 @@ from financial_data_warehouse_automation_spark.registry import query
 from financial_data_warehouse_automation_spark.streaming.pipeline import sessionize_stream
 
 
-def _dedup_state_workdir() -> str:
-    """Fresh /tmp work dir for one doc_stream_dedup_state run:
-    ``strm_dedup_<pid>_<seq>``. Per-run (NOT content-addressed — a
-    shared checkpoint would turn repeat timings into no-ops), but
-    reaped three ways: (1) atexit removes every dir this process
-    created, (2) each call sweeps pid-tagged orphans whose pid no
-    longer exists, (3) the sweep also removes pre-r10 ``strm_dedup_<12
-    hex>`` dirs older than an hour (no pid to probe — age is the
-    liveness proxy). Net effect the r9 verdict asked for: repeated
-    pytest/sweep runs leave no net-new /tmp dirs."""
-    import atexit
-    import re
-    import shutil
-    import tempfile
-    import time
-
-    tmp = tempfile.gettempdir()
-    pid = os.getpid()
-    for d in os.listdir(tmp):
-        full = os.path.join(tmp, d)
-        m = re.fullmatch(r"strm_dedup_(\d+)_\d+", d)
-        if m and int(m.group(1)) != pid:
-            if not os.path.exists(f"/proc/{m.group(1)}"):
-                shutil.rmtree(full, ignore_errors=True)
-        elif re.fullmatch(r"strm_dedup_[0-9a-f]{12}", d):
-            try:
-                stale = time.time() - os.path.getmtime(full) > 3600
-            except OSError:
-                stale = False
-            if stale:
-                shutil.rmtree(full, ignore_errors=True)
-    global _DEDUP_WORKDIR_SEQ
-    _DEDUP_WORKDIR_SEQ += 1
-    work = os.path.join(tmp, f"strm_dedup_{pid}_{_DEDUP_WORKDIR_SEQ}")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return work
-
-
-_DEDUP_WORKDIR_SEQ = 0
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream twin of tables.load_table(..., "events"): reuse the
     batch loader's ts normalization (it adapts to whichever physical
@@ -449,42 +408,30 @@ ORDER BY 1, 2
 )
 def events_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming materialized-view maintenance, oracle-checked: events
-    stream through foreachBatch, each micro-batch's partial aggregate
-    sum-merges into a month-partitioned parquet MV guarded by a
-    last_batch_id high-watermark (re-running a failed batch with the
-    same id is a no-op — the retry double-count hazard of non-
-    transactional MV merge, closed without Delta). The oracle is the
-    full batch aggregate over the source, so the hash matches only if
-    the incremental merges reconstruct the rebuild exactly — the
-    streaming twin of mv_incremental_refresh's merge==rebuild proof.
-    Multi-batch splits + deliberate re-application are exercised in
-    tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
+    stream through foreachBatch, and each micro-batch's partial
+    aggregate sum-merges into a month-bucketed snapshot-table MV
+    (streaming/pipeline.mv_merge_batch; re-running a committed batch id
+    is a no-op — the retry double-count hazard of a sum-merge, closed by
+    the store's ledger). The oracle is the full batch aggregate over
+    the source, so the hash matches only if the incremental merges
+    reconstruct the rebuild exactly — the streaming twin of
+    mv_incremental_refresh's merge==rebuild proof. Multi-batch splits +
+    deliberate re-application are exercised in tests/test_streaming.py.
+    The returned frame is a lazy read of the terminal MV."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import read_snapshot
+    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
     from financial_data_warehouse_automation_spark.streaming.pipeline import run_event_mv_refresh
 
-    work = tempfile.mkdtemp(prefix="strm_mv_")
-    try:
-        mv_path = f"{work}/mv"
-        q = run_event_mv_refresh(
-            spark, _events_stream(spark, sf_dir), mv_path, f"{work}/ckpt"
-        )
-        q.awaitTermination()
-        mv = spark.read.parquet(mv_path)
-        # materialize before the temp dir disappears. Driver-side
-        # collect is safe ONLY because the MV grain is bounded:
-        # |event_type| x |distinct days| rows (a few hundred at any
-        # SF) — do not copy this pattern for an unbounded frame; write
-        # to a durable path and return the lazy read instead.
-        rows = (
-            mv.select("event_type", "day", "n_events", "cents")
-            .orderBy("event_type", "day")
-            .collect()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows)
+    work = scratch_dir("strm_mv_")
+    mv_path = os.path.join(work, "mv")
+    q = run_event_mv_refresh(
+        spark, _events_stream(spark, sf_dir), mv_path,
+        os.path.join(work, "ckpt"),
+    )
+    q.awaitTermination()
+    return read_snapshot(spark, mv_path).select(
+        "event_type", "day", "n_events", "cents"
+    )
 
 
 @query(
@@ -504,38 +451,33 @@ def doc_stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup STATE maintenance — the curation-corpus
     twin of events_stream_mv_refresh: documents stream through
     foreachBatch and each micro-batch min/count-merges into a
-    hex-bucket-partitioned parquet state table
-    ``(dedup_key = md5(norm_text), kept_doc_id, n_copies)`` guarded by
-    a per-bucket last_batch_id high-watermark (retry = no-op). Because
-    (min, count) is a monoid, the terminal state is invariant under
-    ANY batch split — including a late-arriving smaller doc_id taking
-    over an existing key — so the single DuckDB GROUP BY oracle checks
-    every arrival order at once; multi-batch splits, the min-takeover
-    case, and deliberate re-delivery are exercised in
-    tests/test_streaming.py.
+    hex-bucketed snapshot-table state
+    ``(dedup_key = md5(norm_text), kept_doc_id, n_copies)``
+    (streaming/pipeline.dedup_state_merge_batch; re-running a committed
+    batch id is a no-op). Because (min, count) is a monoid, the
+    terminal state is invariant under ANY batch split — including a
+    late-arriving smaller doc_id taking over an existing key — so the
+    single DuckDB GROUP BY oracle checks every arrival order at once;
+    multi-batch splits, the min-takeover case, and deliberate
+    re-delivery are exercised in tests/test_streaming.py.
 
     The returned frame is a LAZY read of the terminal state table (the
     durable artifact a production pipeline keeps — new-batch anti-join
-    for drop decisions, n_copies for duplication stats). Unlike the
-    MV query there is deliberately NO driver-side collect: state grain
-    is per unique document, unbounded at 100 TB. Scale: each
-    micro-batch shuffles once on dedup_key, the merge rewrites only
-    touched buckets (16 here; the bucket_width knob widens to 2-3 hex
-    chars at 100 TB — tests/test_streaming.py pins that widening
-    shrinks the rewritten fraction), and the state read is
-    partition-pruned to the batch's buckets.
-
-    The work dir stays per-run (a shared checkpoint would make every
-    re-run resume-and-skip, silently turning sweep/bench timings of
-    this query into no-op measurements) but is now pid-tagged,
-    registered for atexit removal, and each new run sweeps orphan dirs
-    left by dead or pre-r10 sessions (r9 verdict: the old uuid dirs
-    accumulated across sessions with no reaper)."""
+    for drop decisions, n_copies for duplication stats); state grain is
+    per unique document, unbounded at 100 TB. Scale: each micro-batch
+    shuffles once on dedup_key, the merge rewrites only touched buckets
+    (16 here; the bucket_width knob widens to 2-3 hex chars at 100 TB —
+    tests/test_streaming.py pins that widening shrinks the rewritten
+    fraction), and the state read opens only the batch's buckets. The
+    work dir is per run, so a repeat run re-does the work instead of
+    resuming a finished checkpoint."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import read_snapshot
+    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
     from financial_data_warehouse_automation_spark.streaming.pipeline import (
         run_doc_dedup_state,
     )
 
-    work = _dedup_state_workdir()
+    work = scratch_dir("strm_dedup_")
     raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     docs = (
         spark.readStream.schema(raw_schema)
@@ -544,9 +486,8 @@ def doc_stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = run_doc_dedup_state(spark, docs, f"{work}/state", f"{work}/ckpt")
     q.awaitTermination()
-    return (
-        spark.read.parquet(f"{work}/state")
-        .select("dedup_key", "kept_doc_id", "n_copies")
+    return read_snapshot(spark, f"{work}/state").select(
+        "dedup_key", "kept_doc_id", "n_copies"
     )
 
 
@@ -691,9 +632,9 @@ def source_rowsink_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(RowSinkDataSource)
     except Exception:
         pass
-    from financial_data_warehouse_automation_spark.queries.relational import _rowsink_workdir
+    from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
 
-    work = _rowsink_workdir()
+    work = scratch_dir("rowsink_demo_")
     events = _events_stream(spark, sf_dir).select(
         "event_id",
         "event_type",
@@ -769,20 +710,16 @@ def events_stream_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-maintained state are three routes to one answer, and the
     driver hash-checks this third route against the same SQL.
 
-    Why no batch-id guard (vs doc_stream_dedup_state's high-water
-    mark): bottom-k-by-hash is an idempotent semilattice — min-k is
-    associative, commutative AND absorbing — so ANY micro-batch
-    split, replay, or re-delivery converges to the same terminal
-    state; the (min, count) dedup state needed the guard only because
-    its COUNT component double-counts. Split-invariance plus replay
-    idempotence are pinned in tests/test_streaming.py.
+    Bottom-k-by-hash is an idempotent semilattice — min-k is
+    associative, commutative AND absorbing — so ANY micro-batch split,
+    replay, or re-delivery converges to the same terminal state;
+    split-invariance plus replay idempotence are pinned in
+    tests/test_streaming.py.
 
-    Scale: per batch the state I/O is k rows per TOUCHED day
-    (dynamic partition overwrite), independent of event volume; the
-    weekly answer reads k x days rows, never events. The day
-    partition values would be inferred as DATE on read-back — the
-    state read pins an explicit schema (the bucket-inference lesson,
-    r11)."""
+    Scale: per batch the state I/O is k rows per TOUCHED day (the
+    state is a day-bucketed snapshot table), independent of event
+    volume; the weekly answer reads k x days rows, never events."""
+    from financial_data_warehouse_automation_spark.operators.snapshots import read_snapshot
     from financial_data_warehouse_automation_spark.queries._helpers import scratch_dir
     from financial_data_warehouse_automation_spark.streaming.pipeline import (
         run_events_kmv_state,
@@ -807,9 +744,7 @@ def events_stream_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    state = spark.read.schema("h long, day string").parquet(
-        os.path.join(work, "state")
-    )
+    state = read_snapshot(spark, os.path.join(work, "state"))
     merged = state.select(
         F.date_trunc("week", F.to_date("day")).cast("date").alias("week"),
         "h",

@@ -17,17 +17,21 @@ Two shapes:
    ``events_tumbling_15min`` — identical expressions under
    ``withWatermark``, late rows beyond 30 minutes dropped.
 
-At scale: one micro-batch per arriving file set; the upsert shuffle
-is bounded by the affected periods (partition the warehouse by
-(year, month) and use dynamic partition overwrite, or Delta MERGE
-where available — this module keeps the format-agnostic window form).
+Every table a ``foreachBatch`` sink here maintains is a snapshot table
+(operators/snapshots.py), and every sink commits through
+:func:`operators.snapshots.stream_commit`: a per-writer ledger skips
+replayed batches, and one manifest compare-and-swap publishes a batch's
+buckets all at once. The stateful sinks (warehouse upsert, MV, dedup
+and KMV state) are :func:`snapshot_partitioned_state_commit_batch`
+folds: a batch reads and rewrites only the buckets it touches — one
+(year, month) period of the warehouse for a monthly load — and every
+other bucket keeps its directory.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -52,64 +56,42 @@ def read_statement_line_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
     )
 
 
-# read-or-initialize sites must distinguish "no table yet" from every
-# other read failure; the narrow check lives with the batch sinks
-from financial_data_warehouse_automation_spark.operators.sinks import (
-    is_missing_path_error as _missing_path,
-)
+def _fold_into(table_dir: str, writer_id: str, partial, merge, bucket_of):
+    """foreachBatch: fold ``partial(batch)`` into the snapshot table at
+    ``table_dir`` with :func:`snapshot_partitioned_state_commit_batch`
+    (``merge`` and ``bucket_of`` are its arguments) under the fixed
+    ``writer_id``. The ledger skips a batch id this writer committed,
+    so the table keeps one checkpoint: a fresh checkpoint restarting at
+    batch 0 would be taken for a replay."""
+    sink = snapshot_partitioned_state_commit_batch(
+        table_dir, merge, bucket_of, writer_id
+    )
+
+    def apply(batch: DataFrame, batch_id: int) -> None:
+        os.makedirs(table_dir, exist_ok=True)
+        sink(partial(batch), batch_id)
+
+    return apply
 
 
 def _upsert_batch(warehouse_path: str):
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        facts = parse_income_statement(batch)
-        try:
-            existing = spark.read.parquet(warehouse_path)
-            have_warehouse = True
-        except AnalysisException as exc:
-            # Only the missing-path case means "first batch: no
-            # warehouse yet". Any other read failure (FS hiccup,
-            # corrupt footer, permissions) must FAIL the batch —
-            # foreachBatch re-runs it under the same batch_id —
-            # because the dynamic overwrite below would otherwise
-            # replace every (year, month) period present in this
-            # batch with ONLY the new facts, silently truncating
-            # previously accumulated rows in those periods.
-            if not _missing_path(exc):
-                raise
-            existing = spark.createDataFrame([], facts.schema)
-            have_warehouse = False
+    """foreachBatch: the S12 keyed upsert of one micro-batch's parsed
+    facts into the warehouse snapshot table, bucketed by period
+    (``year*100+month``). A batch reads back and rewrites only the
+    periods its facts touch; an untouched period keeps its directory
+    in the new manifest. A committed bucket that cannot be read fails
+    the batch before anything is published."""
 
-        # Partition-scoped merge: only the (year, month) periods present
-        # in this batch are read back, merged, and rewritten — untouched
-        # periods' files are never opened. This is the plain-parquet
-        # equivalent of Delta MERGE for the monthly-load case; at 100 TB
-        # a batch touches one partition out of hundreds.
-        periods = [
-            (r.year, r.month)
-            for r in facts.select("year", "month").distinct().collect()
-        ]
-        if not periods:
-            return
-        period_pred = None
-        for y, m in periods:
-            p = (F.col("year") == y) & (F.col("month") == m)
-            period_pred = p if period_pred is None else (period_pred | p)
-
-        merged = upsert_keep_last(
-            existing.where(period_pred) if have_warehouse else existing,
-            facts,
-            list(WAREHOUSE_KEY),
-            [F.asc("amount")],
+    def merge(prev, facts):
+        return upsert_keep_last(
+            facts.limit(0) if prev is None else prev, facts,
+            list(WAREHOUSE_KEY), [F.asc("amount")],
         )
-        writer = (
-            merged.write.mode("overwrite")
-            .partitionBy("year", "month")
-            .option("partitionOverwriteMode", "dynamic")
-        )
-        writer.parquet(warehouse_path)
 
-    return apply
+    return _fold_into(
+        warehouse_path, "warehouse", parse_income_statement, merge,
+        lambda df: F.col("year") * 100 + F.col("month"),
+    )
 
 
 def run_statement_ingest(
@@ -306,83 +288,33 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-MV_GRAIN = ("event_type", "day")
-
-
 def mv_merge_batch(mv_path: str):
     """foreachBatch: merge one micro-batch's partial aggregate into the
     stored daily-events MV — the streaming side of
     ``mv_incremental_refresh`` (count/sum monoids merge associatively).
+    Rows are ``(event_type, day, n_events, cents)``, bucketed by month
+    (``yyyy-MM``), so a batch rewrites only the months it touches,
+    never the MV's history. Re-applying a committed batch id is a
+    no-op (the store's ledger skips it), which closes the one hazard of
+    a sum-merge: counting a retried batch twice."""
 
-    Exactly-once under retries WITHOUT Delta transactions: every MV row
-    carries ``last_batch_id`` = the id of the last micro-batch merged
-    into its month partition. foreachBatch re-runs a failed batch with
-    the SAME batch_id, so a month whose stored id already >= this
-    batch_id is skipped — re-applying a sum-merge twice would
-    double-count, the one hazard plain-parquet MV maintenance has.
-    The rewrite is partition-scoped (dynamic overwrite of touched
-    months only), so at 100 TB a batch rewrites one month of MV rows,
-    never the MV's history."""
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        partial = (
-            batch.groupBy(
-                "event_type", F.to_date("ts").alias("day")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(
-                    F.round(F.col("value") * 100, 0).cast("bigint")
-                ).alias("cents"),
-            )
-            .withColumn("month", F.date_format("day", "yyyy-MM"))
-            .withColumn("last_batch_id", F.lit(batch_id).cast("long"))
-        )
-        months = [r.month for r in partial.select("month").distinct().collect()]
-        if not months:
-            return
-        try:
-            existing = spark.read.parquet(mv_path).where(
-                F.col("month").isin(months)
-            )
-            # retry guard: drop months this exact batch already reached
-            applied = {
-                r.month
-                for r in existing.where(F.col("last_batch_id") >= batch_id)
-                .select("month").distinct().collect()
-            }
-        except AnalysisException as exc:
-            # Only the missing-path case means "first batch: no MV
-            # yet". A transient FS error or corrupt footer must FAIL
-            # the batch (foreachBatch re-runs it with the same id) —
-            # swallowing it here would make the dynamic overwrite
-            # replace accumulated months with one batch's partial.
-            if not _missing_path(exc):
-                raise
-            existing = spark.createDataFrame([], partial.schema)
-            applied = set()
-        todo = [m for m in months if m not in applied]
-        if not todo:
-            return
-        merged = (
-            existing.where(F.col("month").isin(todo))
-            .unionByName(partial.where(F.col("month").isin(todo)))
-            .groupBy("event_type", "day", "month")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("cents").alias("cents"),
-                F.max("last_batch_id").alias("last_batch_id"),
-            )
-        )
-        (
-            merged.write.mode("overwrite")
-            .partitionBy("month")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(mv_path)
+    def partial(batch):
+        return batch.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("cents"),
         )
 
-    return apply
+    def merge(prev, part):
+        if prev is None:
+            return part
+        return prev.unionByName(part).groupBy("event_type", "day").agg(
+            F.sum("n_events").alias("n_events"), F.sum("cents").alias("cents")
+        )
+
+    return _fold_into(
+        mv_path, "mv", partial, merge,
+        lambda df: F.date_format("day", "yyyy-MM"),
+    )
 
 
 def run_event_mv_refresh(
@@ -404,9 +336,8 @@ def dedup_state_merge_batch(state_path: str, bucket_width: int = 1):
     exact-dedup STATE table — the streaming side of ``doc_exact_dedup``
     (reference parity: the keep-first semantics of
     python_version/build_warehouse.py's keyed upsert, applied to the
-    curation corpus). State rows are
-    ``(dedup_key, kept_doc_id, n_copies, bucket, last_batch_id)`` with
-    ``dedup_key = md5(norm_text(text))``.
+    curation corpus). State rows are ``(dedup_key, kept_doc_id,
+    n_copies)`` with ``dedup_key = md5(norm_text(text))``.
 
     The per-key state is the (min, count) MONOID — min(doc_id) and
     count are associative + commutative — so the terminal state is
@@ -415,44 +346,23 @@ def dedup_state_merge_batch(state_path: str, bucket_width: int = 1):
     (an insert-only "first writer wins" table would get that wrong;
     the min-merge updates it). That split-invariance is what lets one
     DuckDB ``GROUP BY key`` oracle check every possible arrival order.
+    Re-applying a committed batch id is a no-op (the store's ledger
+    skips it); merging it again would double-count ``n_copies``.
 
-    Exactly-once under retries without Delta, same scheme as
-    :func:`mv_merge_batch`: ``bucket`` = first ``bucket_width`` hex
-    chars of the key (16**width partitions), each touched bucket is
-    rewritten via dynamic partition overwrite carrying
-    ``last_batch_id``; a bucket whose stored id already >= this
-    batch_id is skipped, since re-applying the merge would
-    double-count ``n_copies``. ``bucket_width`` IS the 100 TB knob:
-    widening to 2-3 hex chars shrinks each bucket to 1/16th-1/256th
-    of the state, so an incremental batch touching k keys rewrites
-    ~k/(16**width) of the stored rows instead of ~k/16 — the touched
-    FRACTION of state is what widening buys (the touched bucket COUNT
-    can grow; each is proportionally smaller). Pinned by
-    tests/test_streaming.py's width-2 test: same terminal state,
-    strictly fewer pre-existing rows rewritten per delta batch."""
+    The bucket is the first ``bucket_width`` hex chars of the key
+    (16**width buckets), and a batch rewrites only the buckets it
+    touches. ``bucket_width`` IS the 100 TB knob: widening to 2-3 hex
+    chars shrinks each bucket to 1/16th-1/256th of the state, so an
+    incremental batch touching k keys rewrites ~k/(16**width) of the
+    stored rows instead of ~k/16 — the touched FRACTION of state is
+    what widening buys (the touched bucket COUNT can grow; each is
+    proportionally smaller). Pinned by tests/test_streaming.py's
+    width-2 test: same terminal state, strictly fewer pre-existing rows
+    rewritten per delta batch."""
+    from financial_data_warehouse_automation_spark.operators.text import norm_text
 
-    # Explicit read schema: the bucket partition column is HEX text,
-    # and Spark's partition-type inference looks only at the directory
-    # names present — a state whose stored buckets happen to be
-    # digits-only (entirely possible for a small first batch) gets
-    # bucket inferred LONG, after which isin('d') is an ANSI
-    # CAST_INVALID_INPUT crash and, worse at bucket_width >= 2, a
-    # digits-only bucket like '01' reads back as 1 and dynamic
-    # overwrite would rewrite it into a DIFFERENT partition directory
-    # (surfaced by the any-split hypothesis test drawing an all-digit
-    # first batch, r11). Pinning the schema disables inference for
-    # this read. mv_merge_batch's month partitions ('yyyy-MM') can
-    # never parse as integral/date, so the mv read is safe by format.
-    _state_schema = (
-        "dedup_key string, kept_doc_id long, n_copies long, "
-        "last_batch_id long, bucket string"
-    )
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        from financial_data_warehouse_automation_spark.operators.text import norm_text
-
-        spark = batch.sparkSession
-        partial = (
+    def partial(batch):
+        return (
             batch.select(
                 F.md5(norm_text("text").cast("binary")).alias("dedup_key"),
                 "doc_id",
@@ -462,56 +372,20 @@ def dedup_state_merge_batch(state_path: str, bucket_width: int = 1):
                 F.min("doc_id").alias("kept_doc_id"),
                 F.count(F.lit(1)).cast("long").alias("n_copies"),
             )
-            .withColumn("bucket", F.substring("dedup_key", 1, bucket_width))
-            .withColumn("last_batch_id", F.lit(batch_id).cast("long"))
-        )
-        buckets = [
-            r.bucket for r in partial.select("bucket").distinct().collect()
-        ]
-        if not buckets:
-            return
-        try:
-            existing = spark.read.schema(_state_schema).parquet(
-                state_path
-            ).where(F.col("bucket").isin(buckets))
-            applied = {
-                r.bucket
-                for r in existing.where(F.col("last_batch_id") >= batch_id)
-                .select("bucket").distinct().collect()
-            }
-        except AnalysisException as exc:
-            # only missing-path means "first batch"; anything else must
-            # fail the batch so foreachBatch retries it (same reasoning
-            # as mv_merge_batch)
-            if not _missing_path(exc):
-                raise
-            existing = spark.createDataFrame([], partial.schema)
-            applied = set()
-        todo = [b for b in buckets if b not in applied]
-        if not todo:
-            return
-        merged = (
-            existing.where(F.col("bucket").isin(todo))
-            .unionByName(partial.where(F.col("bucket").isin(todo)))
-            .groupBy("dedup_key", "bucket")
-            .agg(
-                F.min("kept_doc_id").alias("kept_doc_id"),
-                F.sum("n_copies").cast("long").alias("n_copies"),
-                F.max("last_batch_id").alias("last_batch_id"),
-            )
-        )
-        (
-            merged.select(
-                "dedup_key", "kept_doc_id", "n_copies", "bucket",
-                "last_batch_id",
-            )
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_path)
         )
 
-    return apply
+    def merge(prev, part):
+        if prev is None:
+            return part
+        return prev.unionByName(part).groupBy("dedup_key").agg(
+            F.min("kept_doc_id").alias("kept_doc_id"),
+            F.sum("n_copies").cast("long").alias("n_copies"),
+        )
+
+    return _fold_into(
+        state_path, "dedup", partial, merge,
+        lambda df: F.substring("dedup_key", 1, bucket_width),
+    )
 
 
 def run_doc_dedup_state(
@@ -520,7 +394,7 @@ def run_doc_dedup_state(
 ) -> StreamingQuery:
     """Stream documents into the exact-dedup state table (availableNow
     = one scheduled maintenance pass; drop the trigger for a live
-    tail). ``bucket_width`` widens the state partitioning — see
+    tail). ``bucket_width`` widens the state bucketing — see
     :func:`dedup_state_merge_batch`."""
     return (
         docs.writeStream.foreachBatch(
@@ -618,75 +492,37 @@ def kmv_state_merge_batch(state_path: str, k: int = 32):
     streaming query reuses that oracle bit-for-bit).
 
     State rows are ``(h, day)``: the k smallest md5-prefix hashes of
-    the distinct user_ids seen each day. Bottom-k-by-hash is an
+    the distinct user_ids seen each day, bucketed by day
+    (``yyyy-MM-dd``), so a batch rewrites k rows per touched day —
+    state I/O independent of event volume. Bottom-k-by-hash is an
     idempotent SEMILATTICE, not just a monoid: min-k(min-k(A) ∪ B) ==
     min-k(A ∪ B) gives split-invariance under ANY micro-batch
-    arrangement, and min-k(S ∪ batch) == S once a batch is folded
-    gives natural replay idempotence — so unlike
-    :func:`dedup_state_merge_batch` (whose n_copies SUM double-counts
-    on re-delivery) this state needs NO last_batch_id high-watermark;
-    a retried epoch converges to the same partitions byte-for-byte.
+    arrangement, and min-k(S ∪ batch) == S once a batch is folded, so
+    even a re-delivery under a new batch id leaves the state as it
+    was (the (min, count) dedup state has no such property)."""
+    from pyspark.sql import Window
 
-    Mechanics mirror the dedup state otherwise: touched-day dynamic
-    partition overwrite (a batch rewrites k rows per touched day —
-    state I/O independent of event volume), and the state read pins
-    an explicit schema because the day partition values (yyyy-MM-dd)
-    would otherwise be INFERRED as DATE and drift the column type
-    (same class of bug as the hex-bucket LONG inference fixed this
-    round)."""
     from financial_data_warehouse_automation_spark.functions.scalars import md5_prefix_int
 
-    _state_schema = "h long, day string"
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        partial = batch.select(
+    def partial(batch):
+        return batch.select(
             F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
             md5_prefix_int(
                 F.col("user_id").cast("string").cast("binary")
             ).alias("h"),
         ).distinct()
-        # touched-day probe straight off the batch (r16): going through
-        # ``partial`` made the probe job compute the full distinct
-        # (day, md5-hash) pairs just to list distinct days — the hash
-        # work is repaid NOTHING here and is recomputed anyway by the
-        # merged write below (guide §2.3: shuffle/aggregate only the
-        # columns the answer needs)
-        days = [
-            r.day
-            for r in batch.select(
-                F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
-            ).distinct().collect()
-        ]
-        if not days:
-            return
-        try:
-            existing = spark.read.schema(_state_schema).parquet(
-                state_path
-            ).where(F.col("day").isin(days))
-        except AnalysisException as exc:
-            if not _missing_path(exc):
-                raise
-            existing = spark.createDataFrame([], _state_schema)
+
+    def merge(prev, part):
+        rows = part if prev is None else prev.unionByName(part)
         w = Window.partitionBy("day").orderBy("h")
-        merged = (
-            existing.select("day", "h")
-            .unionByName(partial)
-            .distinct()
+        return (
+            rows.distinct()
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= k)
             .select("h", "day")
         )
-        (
-            merged.write.mode("overwrite")
-            .partitionBy("day")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_path)
-        )
 
-    return apply
+    return _fold_into(state_path, "kmv", partial, merge, lambda df: F.col("day"))
 
 
 def run_events_kmv_state(
@@ -806,8 +642,10 @@ def snapshot_partitioned_state_commit_batch(
     MERGE layout of queries/warehouse.warehouse_upsert_snapshot driven
     by a stream).
 
-    ``bucket_of(df) -> Column`` gives a row's int bucket from its key
-    columns and must be stable: a key's bucket is its home for life.
+    ``bucket_of(df) -> Column`` gives a row's bucket from its key
+    columns (an int, or a string such as a month; its string form is
+    the bucket id). It must be non-null and stable: a key's bucket is
+    its home for life.
     ``merge(prev: DataFrame | None, batch: DataFrame) -> DataFrame``
     receives the previous state of the touched buckets only (``None``
     when none exists yet) and returns those buckets' full new rows; a

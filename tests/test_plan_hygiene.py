@@ -544,6 +544,35 @@ def test_no_snapshot_read_bypasses_read_snapshot():
     assert not bypasses, bypasses
 
 
+def _code_strings(path):
+    """``(line, text)`` for every string the module's code spells:
+    literals, and f-strings with each field as ``{}``. Docstrings are
+    left out, so they may describe what the code must not do."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.JoinedStr):
+            yield node.lineno, "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+        elif (
+            isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and id(node) not in docstrings
+        ):
+            yield node.lineno, node.value
+
+
 def test_only_snapshots_module_names_store_files():
     """The snapshot store's file names — ``manifest[-<branch>]-v<N>.json``
     and the sidecars' ``<kind>[-<branch>]-v<N>[.<token>].json`` — and the
@@ -552,7 +581,6 @@ def test_only_snapshots_module_names_store_files():
     and ``read_sidecar``, so a second copy of the file format cannot
     drift from the store. A literal, f-string or regex source that
     spells such a name fails; docstrings may describe the names."""
-    import ast
     import pathlib
 
     import financial_data_warehouse_automation_spark as pkg
@@ -565,30 +593,35 @@ def test_only_snapshots_module_names_store_files():
         rel = path.relative_to(root).as_posix()
         if rel == "operators/snapshots.py":
             continue
-        tree = ast.parse(path.read_text())
-        docstrings = {
-            id(node.body[0].value)
-            for node in ast.walk(tree)
-            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
-                                 ast.AsyncFunctionDef))
-            and node.body
-            and isinstance(node.body[0], ast.Expr)
-            and isinstance(node.body[0].value, ast.Constant)
-        }
-        for node in ast.walk(tree):
-            if isinstance(node, ast.JoinedStr):
-                text = "".join(
-                    v.value if isinstance(v, ast.Constant) else "{}"
-                    for v in node.values
-                )
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                if id(node) in docstrings:
-                    continue
-                text = node.value
-            else:
-                continue
+        for line, text in _code_strings(path):
             if store_name.search(text) or text == "_sidecars":
-                offenders.append(f"{rel}:{node.lineno}")
+                offenders.append(f"{rel}:{line}")
+    assert not offenders, sorted(set(offenders))
+
+
+def test_stream_state_has_one_exactly_once_protocol():
+    """Stream state commits through operators.snapshots.stream_commit
+    alone: its per-writer ledger skips replays and one manifest
+    compare-and-swap publishes a batch. A dynamic partition overwrite
+    is not atomic across partitions, and a per-row ``last_batch_id``
+    high-water mark is a second replay ledger, so no package module
+    but operators/sinks.py (the batch ``overwrite_table``) sets
+    ``partitionOverwriteMode``, and none names a ``last_batch_id``
+    column."""
+    import pathlib
+
+    import financial_data_warehouse_automation_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for line, text in _code_strings(path):
+            if "last_batch_id" in text or (
+                "partitionOverwriteMode" in text
+                and rel != "operators/sinks.py"
+            ):
+                offenders.append(f"{rel}:{line}")
     assert not offenders, sorted(set(offenders))
 
 

@@ -77,20 +77,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert pruned.count() == expected
 
 
-def test_compact_partition(spark, sf_dir, tmp_path):
-    from financial_data_warehouse_automation_spark.operators.sinks import compact_partition
-
-    path = str(tmp_path / "many")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(400)
-    o.repartition(8).write.parquet(path)
-    before_rows = spark.read.parquet(path).count()
-    n_before = compact_partition(spark, path, target_files=1)
-    assert n_before == 8
-    after = spark.read.parquet(path)
-    assert len(after.inputFiles()) == 1
-    assert after.count() == before_rows
-
-
 def test_schema_evolution_merge_and_union(spark, tmp_path):
     """Schema evolution at the warehouse boundary (SURVEY §1.4: the GS
     version added a Group column the Python version lacked): a later

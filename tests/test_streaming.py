@@ -11,6 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from financial_data_warehouse_automation_spark.ingest.fixtures import INCOME_LINES
+from financial_data_warehouse_automation_spark.operators.snapshots import (
+    committed_through,
+    latest_version,
+    read_manifest,
+    read_snapshot,
+)
 from financial_data_warehouse_automation_spark.streaming.pipeline import (
     event_window_counts_stream,
     run_statement_ingest,
@@ -47,15 +53,14 @@ def test_stream_ingest_exactly_once_and_idempotent(spark, dirs):
 
     q = run_statement_ingest(spark, drop, wh, ckpt)
     q.awaitTermination()
-    first = spark.read.parquet(wh)
+    first = read_snapshot(spark, wh)
     n1 = first.count()
     assert n1 == 7  # period-1 parsed facts (dept 123: 5, dept 124: 2)
 
     # second run: f1 already consumed (checkpoint), f2 new, f1 also
     # re-dropped under a new name — the upsert collapses the re-delivery
-    # capture period-1 partition files before run 2 (which only adds f2)
-    p1_dir = os.path.join(wh, "year=2024", "month=1")
-    assert os.path.isdir(p1_dir)  # (year, month)-partitioned layout
+    # capture the period-1 bucket before run 2 (which only adds f2)
+    p1_dir = read_manifest(wh)["202401"]  # (year*100+month)-bucketed
     p1_before = {
         f: os.path.getmtime(os.path.join(p1_dir, f))
         for f in os.listdir(p1_dir)
@@ -64,11 +69,14 @@ def test_stream_ingest_exactly_once_and_idempotent(spark, dirs):
     _write_drop_file(drop, "f2.json", f2)
     q = run_statement_ingest(spark, drop, wh, ckpt)
     q.awaitTermination()
-    final = spark.read.parquet(wh)
+    final = read_snapshot(spark, wh)
     assert final.count() == 10  # 7 + 3 period-2 facts, no dup keys
     key = ["gl_code", "year", "month", "department", "category"]
     assert final.select(*key).distinct().count() == 10
-    # partition-scoped merge: period 1 untouched by the period-2 batch
+    # bucket-scoped merge: period 1 untouched by the period-2 batch —
+    # the new manifest names the same directory, and its files were
+    # not rewritten
+    assert read_manifest(wh)["202401"] == p1_dir
     p1_after = {
         f: os.path.getmtime(os.path.join(p1_dir, f))
         for f in os.listdir(p1_dir)
@@ -79,17 +87,16 @@ def test_stream_ingest_exactly_once_and_idempotent(spark, dirs):
     _write_drop_file(drop, "f1_redelivered.json", f1)
     q = run_statement_ingest(spark, drop, wh, ckpt)
     q.awaitTermination()
-    final2 = spark.read.parquet(wh)
+    final2 = read_snapshot(spark, wh)
     assert final2.count() == 10
     assert final2.select(*key).distinct().count() == 10
 
 
 def test_upsert_batch_fails_loudly_on_poisoned_warehouse(spark, tmp_path):
-    """A warehouse read failure that is NOT the missing-path case must
-    fail the batch (foreachBatch re-runs it), never be treated as
-    'first batch: no warehouse yet' — that misread would make the
-    dynamic partition overwrite truncate every period in the batch to
-    only the new facts."""
+    """A committed bucket the upsert cannot read must fail the batch
+    (foreachBatch re-runs it), never be treated as empty — that misread
+    would publish the touched period with only the new facts. Nothing
+    is committed: the latest version stays where it was."""
     from financial_data_warehouse_automation_spark.ingest.excel import LINE_SCHEMA
     from financial_data_warehouse_automation_spark.streaming.pipeline import _upsert_batch
 
@@ -98,31 +105,24 @@ def test_upsert_batch_fails_loudly_on_poisoned_warehouse(spark, tmp_path):
     _write_drop_file(batch_dir, "f1.json", f1)
     batch = spark.read.schema(LINE_SCHEMA).json(batch_dir)
 
-    # sanity: the genuinely-missing path still initializes an empty
-    # warehouse and writes the first batch
-    fresh = str(tmp_path / "fresh_wh")
-    _upsert_batch(fresh)(batch, 0)
-    assert spark.read.parquet(fresh).count() == 7
+    # sanity: a table with no manifest yet takes the first batch
+    wh = str(tmp_path / "wh")
+    _upsert_batch(wh)(batch, 0)
+    assert read_snapshot(spark, wh).count() == 7
+    version = latest_version(wh)
 
-    # corrupt footer: read fails with a non-PATH error -> batch raises,
-    # the poisoned file is left untouched (no overwrite happened)
-    poisoned = tmp_path / "poisoned_wh"
-    poisoned.mkdir()
-    garbage = poisoned / "part-00000.snappy.parquet"
-    garbage.write_bytes(b"this is not a parquet footer")
+    # corrupt every parquet file of the committed period bucket, then
+    # apply a batch touching that period -> the batch raises
+    bucket = read_manifest(wh)["202401"]
+    files = [f for f in os.listdir(bucket) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        with open(os.path.join(bucket, f), "wb") as fh:
+            fh.write(b"this is not a parquet footer")
     with pytest.raises(Exception):
-        _upsert_batch(str(poisoned))(batch, 0)
-    assert garbage.read_bytes() == b"this is not a parquet footer"
-    assert sorted(p.name for p in poisoned.iterdir()) == [garbage.name]
-
-    # empty dir: AnalysisException UNABLE_TO_INFER_SCHEMA, not
-    # PATH_NOT_FOUND -> must also raise (exercises _missing_path's
-    # condition check on a real AnalysisException), dir left empty
-    empty = tmp_path / "empty_wh"
-    empty.mkdir()
-    with pytest.raises(Exception):
-        _upsert_batch(str(empty))(batch, 0)
-    assert list(empty.iterdir()) == []
+        _upsert_batch(wh)(batch, 1)
+    assert latest_version(wh) == version
+    assert committed_through(wh, "warehouse") == 0
 
 
 def test_event_stream_window_equals_batch(spark, sf_dir, tmp_path):
@@ -404,8 +404,8 @@ def test_stream_mv_refresh_multibatch_and_retry_idempotent(
     """The MV merge must (a) reconstruct the full batch aggregate when
     the stream arrives as MANY micro-batches, and (b) be a no-op when a
     batch is re-applied with the same batch_id (foreachBatch retry
-    semantics) — the double-count hazard the last_batch_id guard
-    exists for."""
+    semantics) — the double-count hazard the store's ledger exists
+    for."""
     from financial_data_warehouse_automation_spark.streaming.pipeline import (
         mv_merge_batch,
         run_event_mv_refresh,
@@ -426,7 +426,7 @@ def test_stream_mv_refresh_multibatch_and_retry_idempotent(
     q = run_event_mv_refresh(spark, stream, mv_path, str(tmp_path / "ckpt"))
     q.awaitTermination()
 
-    mv = spark.read.parquet(mv_path)
+    mv = read_snapshot(spark, mv_path)
     want = (
         events.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
@@ -444,27 +444,27 @@ def test_stream_mv_refresh_multibatch_and_retry_idempotent(
     }
     assert got == exp
     # multiple batches actually ran (one per file)
-    assert mv.agg(F.max("last_batch_id")).collect()[0][0] >= 4
+    last_id = committed_through(mv_path, "mv")
+    assert last_id >= 4
 
     # retry: re-apply the LAST batch id with a slice of the data — the
-    # guard must skip every month it already merged at that id
+    # ledger must skip it
     before = got
-    last_id = mv.agg(F.max("last_batch_id")).collect()[0][0]
     mv_merge_batch(mv_path)(events.limit(500), last_id)
     after = {
         (r.event_type, r.day): (r.n_events, r.cents)
-        for r in spark.read.parquet(mv_path).collect()
+        for r in read_snapshot(spark, mv_path).collect()
     }
     assert after == before, "same-batch-id re-application must be a no-op"
 
-    # a NEW batch id with new rows must still merge (the guard is not a
-    # permanent freeze)
+    # a NEW batch id with new rows must still merge (the ledger is not
+    # a permanent freeze)
     one_day = events.limit(100)
     add = one_day.groupBy().count().collect()[0][0]
     mv_merge_batch(mv_path)(one_day, last_id + 1)
     total_after = sum(
         v[0] for v in (
-            (r.n_events,) for r in spark.read.parquet(mv_path).collect()
+            (r.n_events,) for r in read_snapshot(spark, mv_path).collect()
         )
     )
     assert total_after == sum(v[0] for v in before.values()) + add
@@ -771,7 +771,7 @@ def test_doc_dedup_state_multibatch_min_takeover_and_retry(
         merge(batch, bid)
     got = {
         (r.dedup_key): (r.kept_doc_id, r.n_copies)
-        for r in spark.read.parquet(state).collect()
+        for r in read_snapshot(spark, state).collect()
     }
     want = {
         r.dedup_key: (r.kept_doc_id, r.n_copies)
@@ -795,7 +795,7 @@ def test_doc_dedup_state_multibatch_min_takeover_and_retry(
     merge(docs.limit(50), len(cuts) - 1)
     after = {
         (r.dedup_key): (r.kept_doc_id, r.n_copies)
-        for r in spark.read.parquet(state).collect()
+        for r in read_snapshot(spark, state).collect()
     }
     assert after == got, "same-batch-id re-application must be a no-op"
 
@@ -808,7 +808,7 @@ def test_doc_dedup_state_multibatch_min_takeover_and_retry(
     merge(one.withColumn("doc_id", F.col("doc_id") + 10_000_000), len(cuts))
     final = {
         r.dedup_key: (r.kept_doc_id, r.n_copies)
-        for r in spark.read.parquet(state).collect()
+        for r in read_snapshot(spark, state).collect()
     }
     assert final[key] == (got[key][0], got[key][1] + 1)
     assert {k: v for k, v in final.items() if k != key} == {
@@ -871,7 +871,7 @@ def test_doc_dedup_state_property_any_split(spark, tmp_path):
             )
         got = {
             r.dedup_key: (r.kept_doc_id, r.n_copies)
-            for r in spark.read.parquet(state).collect()
+            for r in read_snapshot(spark, state).collect()
         }
         want = {
             r.dedup_key: (r.kept_doc_id, r.n_copies)
@@ -898,8 +898,7 @@ def test_doc_dedup_state_bucket_width_shrinks_rewrite(spark, sf_dir, tmp_path):
     width 1 and width 2 (the partitioning is an implementation detail
     of the merge, invisible in values); (b) a small delta batch merged
     into an existing state REWRITES strictly fewer pre-existing rows at
-    width 2 — dynamic partition overwrite rewrites whole touched
-    buckets, and 256-way buckets hold ~1/16th the rows of 16-way ones,
+    width 2 — a batch rewrites whole touched buckets, and 256-way buckets hold ~1/16th the rows of 16-way ones,
     so the touched fraction of state shrinks even though the touched
     bucket COUNT may grow."""
     from financial_data_warehouse_automation_spark.operators.text import norm_text
@@ -918,7 +917,6 @@ def test_doc_dedup_state_bucket_width_shrinks_rewrite(spark, sf_dir, tmp_path):
         state = str(tmp_path / f"state_w{width}")
         merge = dedup_state_merge_batch(state, bucket_width=width)
         merge(base, 0)
-        stored = spark.read.parquet(state)
         touched = [
             r.b
             for r in delta.select(
@@ -929,11 +927,13 @@ def test_doc_dedup_state_bucket_width_shrinks_rewrite(spark, sf_dir, tmp_path):
             .distinct()
             .collect()
         ]
-        rewritten[width] = stored.where(F.col("bucket").isin(touched)).count()
+        rewritten[width] = read_snapshot(
+            spark, state, buckets=touched
+        ).count()
         merge(delta, 1)
         terminal[width] = sorted(
             (r.dedup_key, r.kept_doc_id, r.n_copies)
-            for r in spark.read.parquet(state).collect()
+            for r in read_snapshot(spark, state).collect()
         )
     assert terminal[1] == terminal[2]
     assert 0 < rewritten[2] < rewritten[1]
@@ -943,10 +943,10 @@ def test_kmv_state_split_invariant_and_replay_idempotent(spark, sf_dir, tmp_path
     """kmv_state_merge_batch's semilattice claims, exercised directly:
     (a) two different micro-batch arrangements of the same events give
     byte-identical terminal state; (b) re-applying an already-folded
-    batch (foreachBatch retry semantics) changes nothing — the reason
-    this state, unlike the (min,count) dedup state, carries no
-    last_batch_id guard; and (c) the terminal state IS the batch
-    bottom-k per day."""
+    batch, even under a NEW batch id that the store's ledger does not
+    skip, changes nothing — unlike the (min,count) dedup state, whose
+    count would grow; and (c) the terminal state IS the batch bottom-k
+    per day."""
     from pyspark.sql import Window
 
     from financial_data_warehouse_automation_spark.functions.scalars import md5_prefix_int
@@ -962,11 +962,7 @@ def test_kmv_state_split_invariant_and_replay_idempotent(spark, sf_dir, tmp_path
         apply = kmv_state_merge_batch(str(state_path), k=k)
         for i, part in enumerate(splits):
             apply(part, i)
-        rows = (
-            spark.read.schema("h long, day string")
-            .parquet(str(state_path))
-            .collect()
-        )
+        rows = read_snapshot(spark, str(state_path)).collect()
         return sorted((r.day, r.h) for r in rows)
 
     s1 = terminal(tmp_path / "s1", [events])  # one batch
@@ -981,9 +977,7 @@ def test_kmv_state_split_invariant_and_replay_idempotent(spark, sf_dir, tmp_path
     apply(events, 99)
     s1_replayed = sorted(
         (r.day, r.h)
-        for r in spark.read.schema("h long, day string")
-        .parquet(str(tmp_path / "s1"))
-        .collect()
+        for r in read_snapshot(spark, str(tmp_path / "s1")).collect()
     )
     assert s1_replayed == s1
 
