@@ -21,9 +21,9 @@ Scale notes (100 TB): each operator is one shuffle on its key.
 with the warehouse bucketed by (year, month) period, the streaming
 upsert (streaming/pipeline._upsert_batch) reads and rewrites only the
 periods present in ``updates`` (the monthly-load case touches one
-bucket). The 5-column reference
-key is high-cardinality, so skew-salting is unnecessary; AQE's skew
-split covers pathological keys.
+bucket). The 5-column reference key is high-cardinality, so
+skew-salting is unnecessary; AQE's skew split covers pathological
+keys.
 """
 
 from __future__ import annotations

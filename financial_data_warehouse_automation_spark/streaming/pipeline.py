@@ -25,7 +25,10 @@ buckets all at once. The stateful sinks (warehouse upsert, MV, dedup
 and KMV state) are :func:`snapshot_partitioned_state_commit_batch`
 folds: a batch reads and rewrites only the buckets it touches — one
 (year, month) period of the warehouse for a monthly load — and every
-other bucket keeps its directory.
+other bucket keeps its directory. Each of them commits under a fixed
+writer id, so its table keeps one checkpoint for life: a fresh
+checkpoint restarts at batch 0, and the ledger would skip those batch
+ids as replays.
 """
 
 from __future__ import annotations
@@ -60,9 +63,7 @@ def _fold_into(table_dir: str, writer_id: str, partial, merge, bucket_of):
     """foreachBatch: fold ``partial(batch)`` into the snapshot table at
     ``table_dir`` with :func:`snapshot_partitioned_state_commit_batch`
     (``merge`` and ``bucket_of`` are its arguments) under the fixed
-    ``writer_id``. The ledger skips a batch id this writer committed,
-    so the table keeps one checkpoint: a fresh checkpoint restarting at
-    batch 0 would be taken for a replay."""
+    ``writer_id`` (see the module docstring on checkpoints)."""
     sink = snapshot_partitioned_state_commit_batch(
         table_dir, merge, bucket_of, writer_id
     )
